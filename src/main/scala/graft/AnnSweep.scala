@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** ANN knob sweep — the tuning harness behind the r12 recall work: prints
   * recall@3 per variant for each knob combo at the given data dir, plus the
   * wall time of one RecallReport pass. Usage:
@@ -12,12 +10,7 @@ object AnnSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val combos = args.drop(1).map(_.split(",").map(_.trim.toInt))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Tables.sessionConfigs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val spark = Tables.sessionBuilder("local[32]", 32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftExtensions.register(spark)
     val padded = if (combos.isEmpty) Array(Array.empty[Int]) else combos

@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: times every `SparkEntry.queries` entry against
   * `SPARK_GRAFT_SF_DIR` and emits ONE compact JSON summary line LAST on
   * stdout. Per-query detail goes to `bench_full.json` on disk — the driver
@@ -58,16 +56,13 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+      Runtime.getRuntime.availableProcessors().toString).toInt
     // 5 reps, not 3: under a long-lived heap the dedup family's in-suite
     // medians of 3 can drift 2-3× from their standalone times (GC context
     // from neighboring queries) — a phantom "regression" a median of 5
     // absorbs. Costs ~2 min at sf0.1; correctness of deltas depends on it.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
+    val spark = Tables.sessionBuilder(s"local[$cpus]", cpus)
       // Index-phase scheduling (r19): the phase runs 8 concurrent artifact
       // chains; under the default FIFO job queue the LATENCY-bound chains
       // (price, ivf — many small sequential jobs) queue their every stage
@@ -82,8 +77,7 @@ object Bench {
       // barrier gaps). FIFO stays; the knob remains for re-measurement.
       .config("spark.scheduler.mode",
         sys.env.getOrElse("SPARK_GRAFT_SCHED", "FIFO"))
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The dedup family's bounded-iteration pattern unpersists locally
     // checkpointed per-round RDDs by design; Spark logs one WARN per RDD
@@ -307,7 +301,7 @@ object Bench {
     // an inflated calib = discount the whole run accordingly.
     def calibrate(): Double = {
       val t0 = System.nanoTime()
-      try spark.range(0, 20000000L, 1, cpus.toInt)
+      try spark.range(0, 20000000L, 1, cpus)
         .selectExpr("id % 997 AS k", "xxhash64(id) AS h")
         .groupBy("k").agg(org.apache.spark.sql.functions.sum("h"))
         .write.mode("overwrite").format("noop").save()
@@ -378,17 +372,27 @@ object Bench {
     // sampling every calibEvery*reps executions keeps ~the same sample count
     // while spreading them across the whole timeline.
     val calibStride = calibEvery * reps
+    // Generated classes compiled per timed rep (JVM-wide CodegenMetrics
+    // count delta). A warm pass that still compiles means a new plan shape
+    // or a defeated codegen cache (see Tables.sessionConfigs).
+    val compiles = scala.collection.mutable.LinkedHashMap(
+      names.map { case (n, _) => n -> scala.collection.mutable.ArrayBuffer.empty[Long] }: _*)
+    def compileCount(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val schedule = for (rep <- 1 to reps; nf <- names) yield (rep, nf)
     for (((rep, (name, fn)), execs) <- schedule.zipWithIndex) {
       if (execs > 0 && execs % calibStride == 0) calibSample()
       sampleAt(name) += offsetSec()
+      val c0 = compileCount()
       val t0 = System.nanoTime()
       val t =
         try { fn(spark, sfDir).write.mode("overwrite").format("noop").save();
           (System.nanoTime() - t0) / 1e9 }
         catch { case e: Throwable => System.err.println(s"[bench] $name (rep $rep): $e"); -1.0 }
       samples(name) += t
+      compiles(name) += compileCount() - c0
     }
+    val compilesPerRep = (0 until reps).map(r => compiles.values.map(_(r)).sum)
     // Median stays the headline (continuity with r1–r8 totals); min rides
     // alongside as the noise-floor estimator — on a shared machine the min
     // of spread-out reps is the standard contention-free estimate, and
@@ -504,6 +508,9 @@ object Bench {
         .mkString("{", ",", "}")
     val divergentJson =
       s""""divergent":${sarr(samples)},"divergent_at":${sarr(sampleAt)},"""
+    val compilesJson = s""""compiles_per_rep":[${compilesPerRep.mkString(",")}],"""
+    val queryCompilesJson = compiles.map { case (n, cs) =>
+      "\"" + n + "\":[" + cs.mkString(",") + "]" }.mkString(""""queries_compiles":{""", ",", "},")
     val recallJson =
       if (recall.isEmpty) ""
       else s""""recall":${qmap(recall)},"recall_sec":${ms3(recallSec)},"""
@@ -512,6 +519,7 @@ object Bench {
       s"""{"metric":"total","value":${ms3(total)},"unit":"sec","reps":$reps,""" +
         s""""total_min":${ms3(totalMin)},"warm_sec":${ms3(warmSec)},$idxJson$calibFullJson""" +
         s""""n_queries":${results.size},"n_failed":$failed,$deltaJson$divergentJson$recallJson""" +
+        s"""$compilesJson$queryCompilesJson""" +
         s""""queries":${qmap(results)},"queries_min":${qmap(resultsMin)},""" +
         s""""deltas":${qmap(deltas)},"sf":"$sfDir"}"""
     Files.write(Paths.get("bench_full.json"), full.getBytes(StandardCharsets.UTF_8))
@@ -527,7 +535,7 @@ object Bench {
     val line =
       s"""{"metric":"total","value":${ms3(total)},"unit":"sec","reps":$reps,""" +
         s""""total_min":${ms3(totalMin)},"warm_sec":${ms3(warmSec)},$idxJson$calibLineJson""" +
-        s""""n_queries":${results.size},"n_failed":$failed,$deltaJson$recallJson""" +
+        s""""n_queries":${results.size},"n_failed":$failed,$deltaJson$recallJson$compilesJson""" +
         s""""divergent":[${divergent.map("\"" + _ + "\"").mkString(",")}],""" +
         s""""queries":${qmap(top5)},"sf":"$sfDir"}"""
     spark.stop()

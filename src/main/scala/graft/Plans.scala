@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan audit: prints `explain("formatted")` for the headline
   * queries so plan regressions (lost pushdown, surprise shuffles, missed
   * broadcasts) are visible. Run: `sbt "runMain graft.Plans [query ...]"`.
@@ -9,12 +7,7 @@ import org.apache.spark.sql.SparkSession
 object Plans {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val b = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
+    val spark = Tables.sessionBuilder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftExtensions.register(spark)
     val names = if (args.nonEmpty) args.toSeq

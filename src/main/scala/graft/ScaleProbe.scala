@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off scale probe: replicate the sf0.1 `documents`/`embeddings`
@@ -157,17 +156,13 @@ object ScaleProbe {
     val factors =
       if (args.length > 2) args.drop(2).toSeq.map(_.toInt) else Seq(10, 30)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    // Exponents must price the DISTRIBUTED decomposition loop at every
-    // factor - the 1x baseline would otherwise take the in-task gated
-    // kernel and the ratio would compare different algorithms.
-    builder.config(graft.ops.GraphQueries.DecompInTaskMaxEdgesKey, "0")
-    val spark = builder.getOrCreate()
+      Runtime.getRuntime.availableProcessors().toString).toInt
+    val spark = Tables.sessionBuilder(s"local[$cpus]", cpus)
+      // Exponents must price the DISTRIBUTED decomposition loop at every
+      // factor - the 1x baseline would otherwise take the in-task gated
+      // kernel and the ratio would compare different algorithms.
+      .config(graft.ops.GraphQueries.DecompInTaskMaxEdgesKey, "0")
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftExtensions.register(spark)
 
@@ -211,7 +206,7 @@ object ScaleProbe {
               transform(split(col("text"), " "),
                 t => concat(t, lit("r"), col("rep"))), " ")).as("text"),
           col("lang"), col("source"), col("n_chars"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val embs = Tables.embeddings(spark, src)
       val nVecs = embs.agg(max("vec_id")).head.getLong(0) + 1
@@ -226,7 +221,7 @@ object ScaleProbe {
               x => (x + col("rep").cast("float") * lit(0.003f)).cast("float")))
             .as("embedding"),
           col("label"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
       val li = Tables.lineitem(spark, src)
       val nOk = li.agg(max("l_orderkey")).head.getLong(0) + 1
@@ -240,7 +235,7 @@ object ScaleProbe {
         // groups ×factor
         .withColumn("l_suppkey", col("l_suppkey") + col("rep") * lit(nSk))
         .drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
       val ev = Tables.events(spark, src)
       val nEid = ev.agg(max("event_id")).head.getLong(0) + 1
@@ -249,7 +244,7 @@ object ScaleProbe {
         .withColumn("event_id", col("event_id") + col("rep") * lit(nEid))
         .withColumn("user_id", col("user_id") + col("rep") * lit(nUid))
         .drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dir/events.parquet")
       java.nio.file.Files.write(manifestPath,
         manifest().getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -55,7 +55,41 @@ object Tables {
     // k-element (k ≤ 64 here), so holding 64k keys per task is a few MB;
     // raise the fallback far past every per-task group count we produce.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536",
-    "spark.sql.adaptive.enabled" -> "true")
+    "spark.sql.adaptive.enabled" -> "true",
+    // Generated classes live in ONE JVM-wide LRU keyed by (context
+    // classloader, source). Its default 100 entries is below one warm
+    // pass of the CDC query mix (~127 classes, `events_rfm` alone ~100),
+    // so every class was evicted before its next use and every warm rep
+    // recompiled everything. One pass of the whole 309-query Bench suite
+    // compiles ~3.2k classes at sf0.1 (+~20 MB metaspace to keep them all);
+    // the cap covers that. Static: must be set before the session exists.
+    "spark.sql.codegen.cache.maxEntries" -> "4096",
+    // AQE numbers whole-stage codegen stages in the order its query stages
+    // finish, which varies run to run, and the stage id is part of the
+    // generated class name — so an unchanged pipeline got new source text
+    // and recompiled on warm reps. Plans and explain output keep their
+    // `*(id)` markers.
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    // With isolation on, every streaming query's cloned session gets a
+    // fresh artifact UUID and so a fresh executor classloader — a new
+    // cache key — and recompiles classes byte-identical to the last
+    // query's (16 per catch-up round: dualSink + drain). The program adds
+    // no session artifacts (no addArtifact/addJar), so isolation guards
+    // nothing here. Only honoured at session creation.
+    "spark.sql.artifact.isolation.enabled" -> "false")
+
+  /** The one way to build a graft session: `local`-style master, shuffle
+    * partitions, no UI, and every [[sessionConfigs]] entry applied to the
+    * BUILDER — several are static and throw if set on a live session.
+    */
+  def sessionBuilder(master: String, partitions: Int): SparkSession.Builder = {
+    val b = SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", partitions.toString)
+      .config("spark.ui.enabled", "false")
+    sessionConfigs.foreach { case (k, v) => b.config(k, v) }
+    b
+  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

@@ -3,7 +3,6 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 import graft.Tables
@@ -21,11 +20,7 @@ object Demo {
       ts: Timestamp)
 
   def main(args: Array[String]): Unit = {
-    val b = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
+    val spark = Tables.sessionBuilder("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** ISOLATED index-build decomposition (r19 — the r18 verdict's #1 ask):
   * runs every bench index-build chain STRICTLY SEQUENTIALLY on a quiet
   * box, so each artifact's wall is its own task work free of
@@ -22,14 +20,9 @@ import org.apache.spark.sql.SparkSession
 object IndexProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("index-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Tables.sessionBuilder(s"local[$cpus]", cpus)
+      .appName("index-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftExtensions.register(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query oracle iteration harness: dumps the named queries'
   * results (one coalesced parquet each) plus their declared oracle SQL as
   * JSON, so a local DuckDB session can diff engine vs oracle WITHOUT
@@ -25,13 +23,8 @@ import org.apache.spark.sql.SparkSession
   */
 object OracleProbe {
   def main(args: Array[String]): Unit = {
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .appName("oracle-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-    graft.Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val spark = graft.Tables.sessionBuilder("local[32]", 32)
+      .appName("oracle-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftExtensions.register(spark)
     val names = sys.env.getOrElse("PROBE_QUERIES", "q1_agg").split(",").toSeq

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Single-query latency iteration harness — the timing sibling of
   * [[OracleProbe]]: times the named queries against one dir with a
   * noop sink (full-column evaluation, the bench's own sink), N reps
@@ -19,14 +17,9 @@ import org.apache.spark.sql.SparkSession
   */
 object TimeProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("time-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.Tables.sessionConfigs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.Tables.sessionBuilder(s"local[$cpus]", cpus)
+      .appName("time-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftExtensions.register(spark)
     // args override env (the sbt server bakes env at startup — arg-passed

@@ -12,15 +12,11 @@ trait SparkSuite extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
 
   lazy val spark: SparkSession = {
-    val b = SparkSession.builder()
-      .master("local[4]")
+    val s = Tables.sessionBuilder("local[4]", 4)
       .appName(getClass.getSimpleName)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    Tables.sessionConfigs.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
