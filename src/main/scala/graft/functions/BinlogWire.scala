@@ -26,7 +26,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *     type code + name, server_id, event_size, log_pos, flags.
   *   - `binlog_rotate(event)`    — ROTATE payload: next (file, position) —
   *     exactly the `{name,pos}` offset shape the reference checkpoints
-  *     (`main.go:41-44`) and `CdcLogDirSource` restores.
+  *     (`main.go:41-44`) and the log source's `LogOffset` restores.
   *
   * Checksum note: when the server writes CRC32 checksums (declared in the
   * FORMAT_DESCRIPTION event), the last 4 bytes of each event are the

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Degraded-mode position checkpointing — the reference dual-writes its
   * binlog position to Redis AND a file on every save and restores from
@@ -14,8 +14,7 @@ import java.nio.file.{Files, Path, StandardCopyOption}
   * Both copies are written via temp-file + atomic rename (a reader never
   * sees a torn write), and a failure writing one copy does not fail the
   * other — that is the degraded mode. `load()` returns the FRESHEST
-  * readable copy (highest `pos`), mirroring the reference's
-  * prefer-the-survivor restore.
+  * readable copy, mirroring the reference's prefer-the-survivor restore.
   */
 final class DualPositionStore(primary: Path, secondary: Path) {
 
@@ -42,50 +41,32 @@ final class DualPositionStore(primary: Path, secondary: Path) {
     * (degraded mode keeps running on one store, like the reference when
     * Redis is down, `main.go:354-360`). Returns how many copies landed.
     */
-  def save(off: CdcOffset): Int = {
+  def save(off: LogOffset): Int = {
     val json = off.json()
     Seq(primary, secondary).count(writeOne(_, json))
   }
 
-  private def readOne(target: Path): Option[CdcOffset] =
+  private def readOne(target: Path): Option[LogOffset] =
     try {
       if (!Files.exists(target)) None
-      else CdcOffset.parse(
-        new String(Files.readAllBytes(target), StandardCharsets.UTF_8))
+      else LogOffset.parse(new String(Files.readAllBytes(target), StandardCharsets.UTF_8))
     } catch { case _: Exception => None }
 
   /** Freshest readable position, from whichever copies survive; None only
-    * when BOTH are missing/corrupt.
+    * when BOTH are missing or corrupt. Freshness is rotation order,
+    * `(name, pos)`: byte positions restart in every binlog file, so a stale
+    * copy from an older, longer file must not win on `pos` alone. A single
+    * file has one constant name, and a legacy copy without a name reads as
+    * "" — it never outranks a named copy.
     */
-  def load(): Option[CdcOffset] = {
-    val copies = Seq(primary, secondary).flatMap(readOne)
-    if (copies.isEmpty) None else Some(copies.maxBy(_.pos))
-  }
+  def load(): Option[LogOffset] =
+    Seq(primary, secondary).flatMap(readOne).maxByOption(o => (o.name, o.pos))
+}
 
-  /** Rotating-file variant: persist the FULL `{name, pos}` the reference
-    * checkpoints (`main.go:41-44`). Byte positions reset per binlog file, so
-    * a pos-only mirror is ambiguous across rotations — a stale copy from an
-    * older, longer file would win `maxBy(pos)` and restore into the wrong
-    * file. Freshness here is rotation order: (name, pos) lexicographic,
-    * matching [[CdcDirOffset.isBefore]].
-    */
-  def saveDir(off: CdcDirOffset): Int = {
-    val json = off.json()
-    Seq(primary, secondary).count(writeOne(_, json))
-  }
-
-  private def readDirOne(target: Path): Option[CdcDirOffset] =
-    try {
-      if (!Files.exists(target)) None
-      else CdcDirOffset.parse(
-        new String(Files.readAllBytes(target), StandardCharsets.UTF_8))
-    } catch { case _: Exception => None }
-
-  /** Freshest readable `{name, pos}` position by rotation order; a pos-only
-    * legacy copy fails [[CdcDirOffset.parse]] and is treated as corrupt.
-    */
-  def loadDir(): Option[CdcDirOffset] = {
-    val copies = Seq(primary, secondary).flatMap(readDirOne)
-    if (copies.isEmpty) None else Some(copies.maxBy(o => (o.name, o.pos)))
+object DualPositionStore {
+  /** The mirror a source keeps under its `positionDir` option. */
+  def in(dir: String): DualPositionStore = {
+    val base = Paths.get(dir)
+    new DualPositionStore(base.resolve("position.json"), base.resolve("position.backup.json"))
   }
 }

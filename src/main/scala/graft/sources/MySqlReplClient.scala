@@ -28,9 +28,10 @@ import graft.functions.BinlogWire
   * Architecture — the client is a SPOOLER, not a Spark source: it appends
   * each complete event verbatim to a rotating raw-binlog directory (one
   * file per master binlog file, magic-prefixed, switching on ROTATE
-  * events), and [[CdcBinlogDirSource]] — already spec-proven for offsets,
-  * restart-resume, pushdown, and torn tails — serves that spool to Spark
-  * with the reference's `{name, pos}` offset shape. The split matters at
+  * events), and [[CdcBinlogDirSource]] — the [[LogSource]] with binlog
+  * framing over a directory, spec-proven for offsets, restart-resume,
+  * pushdown, and torn tails — serves that spool to Spark with the
+  * reference's `{name, pos}` offset shape. The split matters at
   * scale: a TCP stream is not replayable, so micro-batch determinism has to
   * come from durable bytes; spool-then-read gives exactly-once delivery to
   * Spark for free (the spool is the write-ahead log), keeps the socket off
@@ -330,7 +331,8 @@ final case class ReplConfig(host: String, port: Int, user: String,
   * end position, and append each streamed event verbatim to
   * `spoolDir/<binlog file>`. Rotation follows the master's ROTATE events;
   * resume needs no external checkpoint because the spool IS the position
-  * (`resumePosition()` = newest file + byte past its last complete event —
+  * (`resumePosition()` = newest file + byte past its last complete event,
+  * found by the same [[Framing.Binlog]] walk the source tails with —
   * `{"", 4}` on an empty spool, exactly the reference's fresh-start
   * default, `main.go:478`).
   */
@@ -346,13 +348,12 @@ final class BinlogSpoolClient(cfg: ReplConfig, spoolDir: Path) extends AutoClose
     * trusted). Empty spool → `("", 4)`.
     */
   def resumePosition(): (String, Long) = {
-    val files = CdcLogDirSource.listLogs(spoolDir.toString)
+    val files = LogFiles.listLogs(spoolDir.toString)
     files.lastOption match {
       case None => ("", 4L)
       case Some(name) =>
         val path = spoolDir.resolve(name).toString
-        val start = CdcBinlogFileSource.dataStart(path)
-        val (_, end) = CdcBinlogFileSource.walkEvents(path, start)
+        val (_, end) = Framing.Binlog.walk(path, Framing.Binlog.dataStart(path))
         (name, end)
     }
   }
@@ -380,7 +381,7 @@ final class BinlogSpoolClient(cfg: ReplConfig, spoolDir: Path) extends AutoClose
     * frame).
     */
   private[sources] def gtidSpoolState(): (GtidSet, MariaGtidSet, Seq[(Path, Long)]) = {
-    val files = CdcLogDirSource.listLogs(spoolDir.toString)
+    val files = LogFiles.listLogs(spoolDir.toString)
     files.foldLeft((GtidSet.Empty, MariaGtidSet.Empty, Seq.empty[(Path, Long)])) {
       case ((my, ma, torn), name) =>
         val path = spoolDir.resolve(name)
@@ -416,7 +417,7 @@ final class BinlogSpoolClient(cfg: ReplConfig, spoolDir: Path) extends AutoClose
     */
   private def scanGtids(path: Path, my0: GtidSet,
       ma0: MariaGtidSet): (GtidSet, MariaGtidSet, Option[Long]) = {
-    val start = CdcBinlogFileSource.dataStart(path.toString)
+    val start = Framing.Binlog.dataStart(path.toString)
     val size = Files.size(path)
     var my = my0
     var ma = ma0

@@ -79,8 +79,8 @@ object CdcPipeline {
       sum(when(col("op") === "update", 1).otherwise(0)).as("n_updates"),
       approx_count_distinct(col("table")).as("n_tables"))
 
-  /** Wire schema for serialized change events (what `CdcFileSource` lines
-    * carry).
+  /** Wire schema for serialized change events (what the line-framed log
+    * source's `line` column carries).
     */
   val wireSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType.fromDDL(
@@ -97,7 +97,7 @@ object CdcPipeline {
     * inside a VALUE string) pass through and die at the exact post-parse
     * filters, which always run — the guard never changes semantics, only
     * bandwidth. Compiles to an And of Or(StringContains…) conjuncts, which
-    * both CDC sources accept via SupportsPushDownFilters.
+    * the line-framed log source accepts via SupportsPushDownFilters.
     *
     * Wire-format caveat (documented contract): a writer that emits
     * non-compact JSON (spaces after colons) must not use the guard — pass
@@ -126,10 +126,11 @@ object CdcPipeline {
     transform(parseLines(guarded), cfg)
   }
 
-  /** Parse `CdcFileSource` output (`line STRING, pos BIGINT`) into the
-    * change-event columns `transform` expects; malformed lines → null table,
-    * dropped by the route filter (fixing the reference's queue-worker panic,
-    * hazard H7). A `file` column (the rotating `CdcLogDirSource`) is
+  /** Parse line-framed log source output (`line STRING, pos BIGINT`) into
+    * the change-event columns `transform` expects; malformed lines → null
+    * table, dropped by the route filter (fixing the reference's queue-worker
+    * panic, hazard H7). A `file` column (the directory layout,
+    * `CdcLogDirSource`) is
     * passed through: after rotation, `pos` alone is ambiguous — line 0
     * exists in every log file — so cross-rotation ordering and any
     * position-keyed dedup must use (file, pos).

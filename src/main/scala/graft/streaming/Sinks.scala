@@ -34,17 +34,25 @@ object Sinks {
     else !checkStatus || (status >= 200 && status < 300)
   }
 
-  /** HTTP delivery for one micro-batch: partition by group, POST per row.
-    * Returns the rows-attempted count (for tests/metrics).
+  /** The one HTTP POST loop: partition the batch by group, POST each row,
+    * and hand `(group, payload, delivered)` to `onPosted` on the executor.
     */
-  def httpDeliverBatch(batch: DataFrame, postUrl: String, checkStatus: Boolean): Unit = {
+  private def postByGroup(batch: DataFrame, postUrl: String, checkStatus: Boolean)(
+      onPosted: (String, String, Boolean) => Unit): Unit = {
     val n = math.max(1, batch.sparkSession.sparkContext.defaultParallelism)
     batch.select(col("group"), col("payload"))
       .repartition(n, col("group"))
       .foreachPartition { rows: Iterator[Row] =>
-        rows.foreach(r => post(postUrl, r.getString(0), r.getString(1), checkStatus))
+        rows.foreach { r =>
+          val (group, payload) = (r.getString(0), r.getString(1))
+          onPosted(group, payload, post(postUrl, group, payload, checkStatus))
+        }
       }
   }
+
+  /** HTTP delivery for one micro-batch: partition by group, POST per row. */
+  def httpDeliverBatch(batch: DataFrame, postUrl: String, checkStatus: Boolean): Unit =
+    postByGroup(batch, postUrl, checkStatus)((_, _, _) => ())
 
   /** Sink A analog (`main.go:95`): enqueue payloads to a queue — the
     * stand-in for the reference's Redis list (`cdc_events`,
@@ -81,17 +89,10 @@ object Sinks {
   /** HTTP delivery with dead-lettering: like `httpDeliverBatch` but failures
     * are captured for redelivery/inspection.
     */
-  def httpDeliverBatchDlq(batch: DataFrame, postUrl: String): Unit = {
-    val n = math.max(1, batch.sparkSession.sparkContext.defaultParallelism)
-    batch.select(col("group"), col("payload"))
-      .repartition(n, col("group"))
-      .foreachPartition { rows: Iterator[Row] =>
-        rows.foreach { r =>
-          if (!post(postUrl, r.getString(0), r.getString(1), checkStatus = true))
-            deadLetters.add((r.getString(0), r.getString(1)))
-        }
-      }
-  }
+  def httpDeliverBatchDlq(batch: DataFrame, postUrl: String): Unit =
+    postByGroup(batch, postUrl, checkStatus = true) { (group, payload, delivered) =>
+      if (!delivered) deadLetters.add((group, payload))
+    }
 
   /** The queue-drain second pipeline (R15, reference `main.go:383-419`):
     * pop everything currently queued and POST each payload again —

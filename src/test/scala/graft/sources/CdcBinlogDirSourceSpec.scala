@@ -126,7 +126,7 @@ class CdcBinlogDirSourceSpec extends SparkSuite {
   test("unchanged directory polls scan nothing") {
     val dir = Files.createTempDirectory("binlogdir_idle")
     write(dir, "d.000001", magic ++ ev(1))
-    val stream = new CdcBinlogDirMicroBatchStream(dir.toString)
+    val stream = new LogStream(LogFiles(Framing.Binlog, dir = true, dir.toString))
     stream.latestOffset()
     val scanned = stream.bytesScanned
     (1 to 5).foreach(_ => stream.latestOffset())
@@ -150,7 +150,7 @@ class CdcBinlogDirSourceSpec extends SparkSuite {
     readOnce(dir, ckpt, Map("positionDir" -> posDir.toString))
     val store = new DualPositionStore(
       posDir.resolve("position.json"), posDir.resolve("position.backup.json"))
-    val restored = store.loadDir()
+    val restored = store.load()
     assert(restored.exists(_.name == "f.000002"), s"restored $restored")
     assert(restored.exists(_.pos >= 4L + ev(4).length), s"restored $restored")
   }
@@ -161,15 +161,15 @@ class CdcBinlogDirSourceSpec extends SparkSuite {
     val secondary = posDir.resolve("position.backup.json")
     val store = new DualPositionStore(primary, secondary)
     // stale copy: older file, LARGER byte pos (longer file) — must lose
-    Files.writeString(primary, CdcDirOffset("f.000001", 50000L).json())
-    Files.writeString(secondary, CdcDirOffset("f.000002", 100L).json())
-    assert(store.loadDir().contains(CdcDirOffset("f.000002", 100L)))
+    Files.writeString(primary, LogOffset("f.000001", 50000L, 50000L).json())
+    Files.writeString(secondary, LogOffset("f.000002", 100L, 100L).json())
+    assert(store.load().contains(LogOffset("f.000002", 100L, 100L)))
     // corrupt the fresh copy: the surviving (stale) copy is still a restore
     Files.writeString(secondary, "{not json")
-    assert(store.loadDir().contains(CdcDirOffset("f.000001", 50000L)))
-    // legacy pos-only JSON (the old mirror format) reads as corrupt, not as
-    // a nameless offset that could outrank a real one
+    assert(store.load().contains(LogOffset("f.000001", 50000L, 50000L)))
+    // legacy pos-only JSON (the old mirror format) reads with an empty name,
+    // so it never outranks a named copy however large its pos
     Files.writeString(secondary, """{"pos":999999}""")
-    assert(store.loadDir().contains(CdcDirOffset("f.000001", 50000L)))
+    assert(store.load().contains(LogOffset("f.000001", 50000L, 50000L)))
   }
 }

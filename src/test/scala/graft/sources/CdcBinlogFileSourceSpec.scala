@@ -91,7 +91,7 @@ class CdcBinlogFileSourceSpec extends SparkSuite {
   test("tail is O(new bytes): polling an unchanged log scans nothing") {
     val log = Files.createTempFile("binlog_tail", ".bin")
     append(log, magic ++ ev(1) ++ ev(2))
-    val tail = new CdcBinlogFileSource.Tail(log.toString)
+    val tail = new Tail(Framing.Binlog, log.toString)
     assert(tail.poll() == (2L, (4 + ev(1).length + ev(2).length).toLong))
     val scannedAfterFirst = tail.bytesScanned
     (1 to 5).foreach(_ => tail.poll())
@@ -135,7 +135,7 @@ class CdcBinlogFileSourceSpec extends SparkSuite {
     readStreamOnce(log, ckpt, Map("positionDir" -> posDir.toString))
     val mirror = posDir.resolve("position.json")
     assert(Files.exists(mirror), "position mirror was not written")
-    val saved = CdcOffset.parse(Files.readString(mirror))
+    val saved = LogOffset.parse(Files.readString(mirror))
     assert(saved.exists(_.pos >= 4L + ev(1).length), saved.toString)
   }
 
@@ -148,11 +148,12 @@ class CdcBinlogFileSourceSpec extends SparkSuite {
     append(log, events)
     val plannedEnd = events.length.toLong
     Files.write(log, events.dropRight(ev(3).length + 5)) // shrink mid-event
-    val range = new CdcBinlogFileSource.EventRange(log.toString, 4L, plannedEnd)
-    try {
-      val err = intercept[java.io.IOException] { range.iterator.toVector }
-      assert(err.getMessage.contains(log.toString), err.getMessage)
-      assert(err.getMessage.contains("truncated"), err.getMessage)
-    } finally range.close()
+    val name = log.getFileName.toString
+    val err = intercept[java.io.IOException] {
+      ReadRange.rows(Framing.Binlog, LogRange(log.toString,
+        LogOffset(name, 4L, 4L), LogOffset(name, plannedEnd, plannedEnd)))
+    }
+    assert(err.getMessage.contains(log.toString), err.getMessage)
+    assert(err.getMessage.contains("truncated"), err.getMessage)
   }
 }

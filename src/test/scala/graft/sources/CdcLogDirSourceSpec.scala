@@ -69,28 +69,28 @@ class CdcLogDirSourceSpec extends SparkSuite {
     val dir = Files.createTempDirectory("cdc_dir_seal")
     append(dir, "a.jsonl", (1 to 500).map(i => line("orders", i % 10)): _*)
     append(dir, "b.jsonl", (1 to 300).map(i => line("orders", i % 10)): _*)
-    val stream = new CdcLogDirMicroBatchStream(dir.toString)
+    val stream = new LogStream(LogFiles(Framing.Lines, dir = true, dir.toString))
 
-    val end1 = stream.latestOffset().asInstanceOf[CdcDirOffset]
-    assert(end1 == CdcDirOffset("b.jsonl", 300, Files.size(dir.resolve("b.jsonl"))))
+    val end1 = stream.latestOffset().asInstanceOf[LogOffset]
+    assert(end1 == LogOffset("b.jsonl", 300, Files.size(dir.resolve("b.jsonl"))))
     // planning the full range seals a.jsonl (counts it once)
-    val parts = stream.planInputPartitions(CdcDirOffset("", 0L, 0L), end1)
-    assert(parts.map(_.asInstanceOf[CdcDirRangePartition].file).toSeq ==
+    val parts = stream.planInputPartitions(LogOffset("", 0L, 0L), end1)
+    assert(parts.map(_.asInstanceOf[LogRange].from.name).toSeq ==
       Seq("a.jsonl", "b.jsonl"))
-    assert(parts(0).asInstanceOf[CdcDirRangePartition].until == 500)
+    assert(parts(0).asInstanceOf[LogRange].until.pos == 500)
 
     val scanned = stream.bytesScanned
     // idle polls + replans: the sealed file is never read again
     (1 to 20).foreach { _ =>
       stream.latestOffset()
-      stream.planInputPartitions(CdcDirOffset("", 0L, 0L), end1)
+      stream.planInputPartitions(LogOffset("", 0L, 0L), end1)
     }
     assert(stream.bytesScanned == scanned, "sealed/unchanged files were re-scanned")
 
     // appending to the NEWEST file scans only the new bytes
     val before = stream.bytesScanned
     append(dir, "b.jsonl", line("orders", 7))
-    val end2 = stream.latestOffset().asInstanceOf[CdcDirOffset]
+    val end2 = stream.latestOffset().asInstanceOf[LogOffset]
     assert(end2.pos == 301)
     assert(stream.bytesScanned - before == Files.size(dir.resolve("b.jsonl")) - end1.bytePos)
   }
@@ -99,28 +99,28 @@ class CdcLogDirSourceSpec extends SparkSuite {
     val dir = Files.createTempDirectory("cdc_dir_cap")
     append(dir, "a.jsonl", (1 to 3).map(i => line("orders", i)): _*)
     append(dir, "b.jsonl", (1 to 4).map(i => line("orders", i)): _*)
-    val stream = new CdcLogDirMicroBatchStream(dir.toString, Some(2))
+    val stream = new LogStream(LogFiles(Framing.Lines, dir = true, dir.toString), Some(2))
     import org.apache.spark.sql.connector.read.streaming.ReadLimit
-    val start = CdcDirOffset("", 0L, 0L)
+    val start = LogOffset("", 0L, 0L)
     // cap inside the first file
-    val c1 = stream.latestOffset(start, ReadLimit.maxRows(2L)).asInstanceOf[CdcDirOffset]
+    val c1 = stream.latestOffset(start, ReadLimit.maxRows(2L)).asInstanceOf[LogOffset]
     assert(c1.name == "a.jsonl" && c1.pos == 2 && c1.bytePos > 0)
     // cap crossing the boundary: 2 remaining in a + 1 into b
-    val c2 = stream.latestOffset(c1, ReadLimit.maxRows(2L)).asInstanceOf[CdcDirOffset]
+    val c2 = stream.latestOffset(c1, ReadLimit.maxRows(2L)).asInstanceOf[LogOffset]
     assert(c2.name == "b.jsonl" && c2.pos == 1 && c2.bytePos > 0, c2.toString)
     // batches between the caps cover exactly the capped lines
     val parts = stream.planInputPartitions(c1, c2)
-      .map(_.asInstanceOf[CdcDirRangePartition])
-    assert(parts.map(p => (p.file, p.from, p.until)).toSeq ==
+      .map(_.asInstanceOf[LogRange])
+    assert(parts.map(p => (p.from.name, p.from.pos, p.until.pos)).toSeq ==
       Seq(("a.jsonl", 2L, 3L), ("b.jsonl", 0L, 1L)))
   }
 
   test("offset JSON round-trips exotic file names; pipeline keeps (file, pos)") {
     // names with a quote/backslash must survive the checkpoint round trip
-    val weird = CdcDirOffset("""my"log\1.jsonl""", 7L, 123L)
-    assert(CdcDirOffset.parse(weird.json()).contains(weird))
-    assert(CdcDirOffset.parse("""{"name":"a.jsonl","pos":3}""")
-      .contains(CdcDirOffset("a.jsonl", 3L, -1L)))
+    val weird = LogOffset("""my"log\1.jsonl""", 7L, 123L)
+    assert(LogOffset.parse(weird.json()).contains(weird))
+    assert(LogOffset.parse("""{"name":"a.jsonl","pos":3}""")
+      .contains(LogOffset("a.jsonl", 3L, -1L)))
 
     // parseLines passes `file` through: after rotation pos alone is
     // ambiguous (line 0 exists in every file) — (file, pos) is the key

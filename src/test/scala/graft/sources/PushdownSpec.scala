@@ -147,11 +147,11 @@ class PushdownSpec extends SparkSuite {
     append(dir.resolve("c.jsonl"), line("orders", "insert", 4))
     val sizeOf = (f: String) => Files.size(dir.resolve(f))
 
-    val stream = new CdcLogDirMicroBatchStream(dir.toString,
+    val stream = new LogStream(LogFiles(Framing.Lines, dir = true, dir.toString),
       filters = Seq(EqualTo("file", "b.jsonl")))
-    val end = stream.latestOffset().asInstanceOf[CdcDirOffset]
-    val parts = stream.planInputPartitions(CdcDirOffset("", 0L, 0L), end)
-    assert(parts.map(_.asInstanceOf[CdcDirRangePartition].file).toSeq == Seq("b.jsonl"))
+    val end = stream.latestOffset().asInstanceOf[LogOffset]
+    val parts = stream.planInputPartitions(LogOffset("", 0L, 0L), end)
+    assert(parts.map(_.asInstanceOf[LogRange].from.name).toSeq == Seq("b.jsonl"))
     // offset discovery tailed the newest file (c) and sealed-counted b;
     // the pruned sealed file a was never even line-counted
     assert(stream.bytesScanned == sizeOf("b.jsonl") + sizeOf("c.jsonl"),

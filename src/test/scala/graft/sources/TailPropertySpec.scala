@@ -9,8 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Property harness for the incremental tail: under ANY append pattern —
   * partial lines, multi-line chunks, empty appends, a final unterminated
-  * line — every poll must agree with the `Files.lines` ground truth the
-  * engine's batch path uses, and the cumulative bytes scanned must stay
+  * line — every poll must agree with a ground truth computed here from
+  * the raw bytes ('\n'-terminated lines), and the cumulative bytes scanned must stay
   * O(file + re-scanned partial tails), never O(polls × file). This is the
   * code where an off-by-one silently drops or duplicates a CDC event, so
   * it gets the generator treatment, not just examples.
@@ -40,7 +40,7 @@ class TailPropertySpec extends AnyFunSuite {
     samples(appendScript, 120).foreach { script =>
       val log = Files.createTempFile("tail_prop", ".log")
       try {
-        val tail = new CdcFileSource.Tail(log.toString)
+        val tail = new Tail(Framing.Lines, log.toString)
         script.foreach { c =>
           Files.write(log, c.getBytes(StandardCharsets.UTF_8), StandardOpenOption.APPEND)
           val (pos, bytePos) = tail.poll()
@@ -79,12 +79,17 @@ class TailPropertySpec extends AnyFunSuite {
           acc += l.getBytes(StandardCharsets.UTF_8).length + 1
           offsets :+= acc
         }
+        // ground truth: the raw bytes split on '\n' (the final '\n' ends the
+        // last line, it does not start an empty one)
+        val truth = new String(Files.readAllBytes(log), StandardCharsets.UTF_8)
+          .split("\n", -1).toVector.dropRight(1)
+        val name = log.getFileName.toString
+        val until = LogOffset(name, ls.length.toLong, offsets(ls.length))
         (0 to ls.length).foreach { from =>
-          val until = ls.length.toLong
-          val viaSkip = CdcFileSource.readLines(log.toString, from.toLong, until)
-          val r = CdcFileSource.openLinesAt(log.toString, from.toLong, until, offsets(from))
-          val viaSeek = try r.iterator.toVector finally r.close()
-          assert(viaSeek == viaSkip, s"from=$from")
+          val viaSeek = ReadRange.lines(
+            LogRange(log.toString, LogOffset(name, from.toLong, offsets(from)), until))
+          val expected = truth.zipWithIndex.drop(from).map { case (l, i) => (l, i.toLong) }
+          assert(viaSeek == expected, s"from=$from")
         }
       } finally Files.deleteIfExists(log)
     }
