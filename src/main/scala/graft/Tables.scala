@@ -76,7 +76,11 @@ object Tables {
     // query's (16 per catch-up round: dualSink + drain). The program adds
     // no session artifacts (no addArtifact/addJar), so isolation guards
     // nothing here. Only honoured at session creation.
-    "spark.sql.artifact.isolation.enabled" -> "false")
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    // Offset, commit and metadata logs written in-process: without native
+    // IO, Hadoop's local file system forks `chmod` per created file and
+    // Spark's default manager `readlink` per rename end (see CheckpointFiles).
+    streaming.CheckpointFiles.ConfKey -> classOf[streaming.CheckpointFiles].getName)
 
   /** The one way to build a graft session: `local`-style master, shuffle
     * partitions, no UI, and every [[sessionConfigs]] entry applied to the

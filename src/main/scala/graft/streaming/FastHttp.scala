@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.io.{BufferedInputStream, InputStream, OutputStream}
+import java.io.{BufferedInputStream, EOFException, IOException, InputStream, OutputStream}
 import java.net.{InetSocketAddress, Socket, URI}
 import java.nio.charset.StandardCharsets
 
@@ -51,7 +51,9 @@ object FastHttp {
       System.arraycopy(payload, 0, req, head.length, payload.length)
       c.out.write(req) // one write → one segment → no delayed-ACK stall
       c.out.flush()
-      readResponse(c.in)
+      val (status, reusable) = readResponse(c.in)
+      if (!reusable) pool.remove(key).foreach(_.close())
+      status
     }
 
     def fresh(): Conn = {
@@ -73,31 +75,101 @@ object FastHttp {
     }
   }
 
-  /** Read one HTTP/1.1 response (status line + headers + Content-Length
-    * body), leaving the stream positioned for the next response.
+  /** Read one HTTP/1.1 response to a POST, framed per RFC 9112 §6.3, and
+    * leave the stream at the next response. Interim `1xx` responses are
+    * skipped; `204` and `304` have no body; otherwise a chunked body is
+    * decoded (trailers included), a `Content-Length` body is read, and a
+    * body with neither runs to EOF. Returns the final status and whether
+    * the connection may carry another request (not after `Connection:
+    * close`, an HTTP/1.0 response without keep-alive, or a read to EOF).
     */
-  private def readResponse(in: InputStream): Int = {
+  private def readResponse(in: InputStream): (Int, Boolean) = {
+    var status = 0
+    var headers = Map.empty[String, String]
+    var http10 = false
+    do {
+      val statusLine = readLine(in)
+      if (statusLine == null) throw new EOFException("connection closed before the response")
+      val parts = statusLine.split(" ", 3)
+      http10 = parts(0) == "HTTP/1.0"
+      status = parts(1).toInt
+      headers = readHeaders(in)
+    } while (status / 100 == 1)
+
+    def tokens(name: String): Seq[String] =
+      headers.get(name).toSeq.flatMap(_.split(",")).map(_.trim.toLowerCase)
+    val connection = tokens("connection")
+    val keepAlive = !connection.contains("close") && (!http10 || connection.contains("keep-alive"))
+    val coding = tokens("transfer-encoding")
+    val reusable =
+      if (status == 204 || status == 304) keepAlive
+      else if (coding.lastOption.contains("chunked")) { readChunked(in); keepAlive }
+      else if (coding.isEmpty && headers.contains("content-length")) {
+        discard(in, headers("content-length").trim.toLong)
+        keepAlive
+      } else { discard(in, -1); false }
+    (status, reusable)
+  }
+
+  private def readChunked(in: InputStream): Unit = {
+    var size = -1L
+    while (size != 0) {
+      val line = readLine(in)
+      if (line == null) throw new EOFException("connection closed mid-chunk")
+      size = java.lang.Long.parseLong(line.takeWhile(_ != ';').trim, 16)
+      if (size > 0) {
+        discard(in, size)
+        if (readLine(in) != "") throw new IOException("chunk not followed by CRLF")
+      }
+    }
+    readHeaders(in) // trailers
+  }
+
+  /** Header fields up to the blank line, names lower-cased; repeated fields
+    * are joined with commas.
+    */
+  private def readHeaders(in: InputStream): Map[String, String] = {
+    val fields = scala.collection.mutable.HashMap.empty[String, String]
+    var line = readLine(in)
+    while (line != null && line.nonEmpty) {
+      val colon = line.indexOf(':')
+      if (colon > 0) {
+        val name = line.substring(0, colon).trim.toLowerCase
+        val value = line.substring(colon + 1).trim
+        fields(name) = fields.get(name).fold(value)(_ + "," + value)
+      }
+      line = readLine(in)
+    }
+    if (line == null) throw new EOFException("connection closed mid-headers")
+    fields.toMap
+  }
+
+  /** One CRLF- (or LF-) terminated line without its terminator; null at EOF
+    * before any byte.
+    */
+  private def readLine(in: InputStream): String = {
     val sb = new StringBuilder
-    var prev = 0
     var b = in.read()
-    while (b != -1 && !(prev == '\r' && b == '\n' && sb.endsWith("\r\n\r"))) {
+    if (b < 0) return null
+    while (b >= 0 && b != '\n') {
       sb.append(b.toChar)
-      prev = b
       b = in.read()
     }
-    if (b == -1) throw new java.io.EOFException("connection closed mid-response")
-    val head = sb.toString()
-    val status = head.split(" ", 3)(1).toInt
-    val len = "(?i)content-length:\\s*(\\d+)".r.findFirstMatchIn(head)
-      .map(_.group(1).toInt).getOrElse(0)
-    var remaining = len
-    val buf = new Array[Byte](8192)
+    if (b < 0) throw new EOFException("connection closed mid-line")
+    if (sb.nonEmpty && sb.last == '\r') sb.setLength(sb.length - 1)
+    sb.toString
+  }
+
+  /** Read and drop `n` bytes, or everything up to EOF when `n` < 0. */
+  private def discard(in: InputStream, n: Long): Unit = {
+    var remaining = if (n < 0) Long.MaxValue else n
+    val buf = new Array[Byte](math.min(8192L, remaining).toInt)
     while (remaining > 0) {
-      val n = in.read(buf, 0, math.min(buf.length, remaining))
-      if (n < 0) throw new java.io.EOFException("short body")
-      remaining -= n
+      val k = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
+      if (k >= 0) remaining -= k
+      else if (n < 0) remaining = 0
+      else throw new EOFException("short body")
     }
-    status
   }
 
   /** Close this thread's pooled connections (tests / shutdown). */

@@ -1,16 +1,12 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{MapType, StringType}
 
-import graft.functions.{BinlogRows, BinlogTestData, BinlogWire}
-import graft.sources.CdcBinlogDirSource
-import graft.streaming.{CdcConfig, CdcPipeline}
+import graft.functions.BinlogTestData
 
 /** Each generated class is compiled once per JVM: a warm re-run of the
   * same plans must hit Spark's codegen cache instead of recompiling.
@@ -41,45 +37,17 @@ class CodegenReuseSpec extends SparkSuite {
   }
 
   test("a second AvailableNow run of the binlog envelope query compiles nothing") {
-    import BinlogTestData.{event, magic, rowsEvent, tableMap}
-    val spool: Path = Files.createTempDirectory("codegen_spool")
-    val fde = event(1700000000L, 15, 1, 0, 0, Array.fill[Byte](57)(0))
-    Files.write(spool.resolve("mysql-bin.000001"), magic ++ fde ++
-      tableMap(100L, "shop", "orders") ++
-      rowsEvent(30, 100L)((1L, "apple"), (2L, "pear")) ++
-      rowsEvent(31, 100L)((1L, "apple"), (1L, "banana")) ++
+    import BinlogTestData.rowsEvent
+    val spool = BinlogTestData.spool(
+      rowsEvent(30, 100L)((1L, "apple"), (2L, "pear")),
+      rowsEvent(31, 100L)((1L, "apple"), (1L, "banana")),
       rowsEvent(32, 100L)((2L, "pear")))
-    val dirSource = classOf[CdcBinlogDirSource].getName
-    val tpe = BinlogWire.binlog_header(col("event")).getField("event_type")
-    val tms = spark.read.format(dirSource).option("path", spool.toString).load()
-      .filter(tpe === 19)
-      .select(BinlogRows.binlog_table_id(col("event")).as("table_id"),
-        BinlogRows.binlog_table(col("event")).getField("tbl").as("table"),
-        col("event").as("tm"))
-    val mapT = MapType(StringType, StringType)
-
-    def envelopes(): DataFrame = {
-      val changes = spark.readStream.format(dirSource).option("path", spool.toString).load()
-        .withColumn("tpe", tpe)
-        .filter(col("tpe").isin(30, 31, 32))
-        .withColumn("table_id", BinlogRows.binlog_table_id(col("event")))
-        .join(broadcast(tms), "table_id")
-        .select(col("table"),
-          when(col("tpe") === 30, "insert").when(col("tpe") === 31, "update")
-            .otherwise("delete").as("op"),
-          explode(BinlogRows.binlog_rows_json(col("event"), col("tm"))).as("chg"),
-          timestamp_seconds(BinlogWire.binlog_header(col("event")).getField("ts_sec")).as("ts"))
-        .select(col("table"), col("op"),
-          from_json(get_json_object(col("chg"), "$.before"), mapT).as("before"),
-          from_json(get_json_object(col("chg"), "$.after"), mapT).as("after"), col("ts"))
-      CdcPipeline.transform(changes, CdcConfig(Map("orders" -> "grp_sales")))
-    }
 
     // one catch-up round: a new query, a fresh checkpoint, the same spool
     def round(): (Long, Long) = {
       val delivered = new java.util.concurrent.atomic.LongAdder
       val n = compilesOf {
-        envelopes().writeStream
+        BinlogTestData.envelopes(spark, spool).writeStream
           .option("checkpointLocation", Files.createTempDirectory("codegen_ckpt").toString)
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (batch: DataFrame, _: Long) => delivered.add(batch.collect().length); () }

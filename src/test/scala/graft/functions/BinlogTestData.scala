@@ -3,11 +3,20 @@ package graft.functions
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, StandardOpenOption}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{MapType, StringType}
+
+import graft.sources.CdcBinlogDirSource
+import graft.streaming.{CdcConfig, CdcPipeline}
 
 /** Byte-level binlog v4 fixtures shared by [[BinlogWireSpec]] and the
   * binlog source spec: packs events exactly per the public wire format
   * (LE u32 timestamp, u8 type, LE u32 server_id, LE u32 event_size,
-  * LE u32 log_pos, LE u16 flags, body).
+  * LE u32 log_pos, LE u16 flags, body). Also a one-file spool and the
+  * envelope query over it, for the streaming specs.
   */
 object BinlogTestData {
 
@@ -70,5 +79,50 @@ object BinlogTestData {
     if (tpe == 31) b.u8(0x3)
     rows.foreach { case (id, item) => img(b, id, item) }
     event(1700000200L, tpe, 1, 0, 0, b.bytes)
+  }
+
+  // --- a one-file spool and the envelope query over it --------------------
+  private val spoolFile = "mysql-bin.000001"
+
+  /** A binlog spool directory of one file: the format description event,
+    * a `shop.orders` TABLE_MAP (table id 100), then `events`.
+    */
+  def spool(events: Array[Byte]*): Path = {
+    val dir = Files.createTempDirectory("binlog_spool")
+    val fde = event(1700000000L, 15, 1, 0, 0, Array.fill[Byte](57)(0))
+    Files.write(dir.resolve(spoolFile), (Seq(magic, fde, tableMap(100L, "shop", "orders")) ++ events).reduce(_ ++ _))
+    dir
+  }
+
+  def appendToSpool(spool: Path, events: Array[Byte]*): Unit =
+    Files.write(spool.resolve(spoolFile), events.reduce(_ ++ _), StandardOpenOption.APPEND)
+
+  /** The streaming envelope query over `spool`, wired as `Demo` wires it:
+    * ROWS events joined to a broadcast of the spool's TABLE_MAPs, decoded,
+    * and `orders` routed to `grp_sales`.
+    */
+  def envelopes(spark: SparkSession, spool: Path): DataFrame = {
+    val dirSource = classOf[CdcBinlogDirSource].getName
+    val tpe = BinlogWire.binlog_header(col("event")).getField("event_type")
+    val tms = spark.read.format(dirSource).option("path", spool.toString).load()
+      .filter(tpe === 19)
+      .select(BinlogRows.binlog_table_id(col("event")).as("table_id"),
+        BinlogRows.binlog_table(col("event")).getField("tbl").as("table"),
+        col("event").as("tm"))
+    val mapT = MapType(StringType, StringType)
+    val changes = spark.readStream.format(dirSource).option("path", spool.toString).load()
+      .withColumn("tpe", tpe)
+      .filter(col("tpe").isin(30, 31, 32))
+      .withColumn("table_id", BinlogRows.binlog_table_id(col("event")))
+      .join(broadcast(tms), "table_id")
+      .select(col("table"),
+        when(col("tpe") === 30, "insert").when(col("tpe") === 31, "update")
+          .otherwise("delete").as("op"),
+        explode(BinlogRows.binlog_rows_json(col("event"), col("tm"))).as("chg"),
+        timestamp_seconds(BinlogWire.binlog_header(col("event")).getField("ts_sec")).as("ts"))
+      .select(col("table"), col("op"),
+        from_json(get_json_object(col("chg"), "$.before"), mapT).as("before"),
+        from_json(get_json_object(col("chg"), "$.after"), mapT).as("after"), col("ts"))
+    CdcPipeline.transform(changes, CdcConfig(Map("orders" -> "grp_sales")))
   }
 }
