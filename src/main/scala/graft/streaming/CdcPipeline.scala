@@ -27,8 +27,7 @@ import graft.cdc.{Envelope, Routing}
   */
 final case class CdcConfig(
     tableToGroup: Map[String, String],
-    keepDeletes: Boolean = false, // fixed-mode H2
-    gapless: Boolean = false) {
+    keepDeletes: Boolean = false) { // fixed-mode H2
   def keptOps: Seq[String] =
     if (keepDeletes) Seq("insert", "update", "delete") else Seq("insert", "update")
 }

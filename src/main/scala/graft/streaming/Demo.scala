@@ -9,8 +9,9 @@ import graft.Tables
 
 /** End-to-end demo of the CDC delivery topology (the reference's full
   * pipeline, `main.go:50-113`): memory change stream → route/filter/envelope
-  * → dual sink (HTTP POST per routed group + queue), delivered against the
-  * in-process DebugSink. Prints every captured POST. Run:
+  * → dual sink (HTTP POST per routed group + a [[FileQueue]] on a temp
+  * directory), delivered against the in-process DebugSink. Prints every
+  * captured POST. Run:
   * `sbt "runMain graft.streaming.Demo"`.
   */
 object Demo {
@@ -26,6 +27,7 @@ object Demo {
 
     val cfg = CdcConfig(Map("orders" -> "grp_sales", "customer" -> "grp_dim"))
     val sink = new DebugSink
+    def tempQueue(name: String) = FileQueue(Files.createTempDirectory(name).toString)
     try {
       implicit val sqlCtx = spark.sqlContext
       val mem = MemoryStream[Change]
@@ -40,9 +42,10 @@ object Demo {
 
       val env = CdcPipeline.transform(mem.toDF(), cfg)
       val ckpt = Files.createTempDirectory("graft_demo_ckpt").toString
-      Sinks.runToCompletion(Sinks.dualSink(env, sink.url, ckpt))
+      val memQueue = tempQueue("graft_demo_mem_queue")
+      Sinks.runToCompletion(Sinks.dualSink(env, sink.url, ckpt, q = memQueue))
 
-      println(s"delivered=${sink.captured.size} queued=${Sinks.queue.size}")
+      println(s"delivered=${sink.captured.size} queued=${memQueue.pending}")
       sink.captured.forEach(c => println(s"${c.method} ${c.path} ${c.body}"))
 
       // the full reference topology through the custom DSv2 source: tail an
@@ -116,7 +119,8 @@ object Demo {
         .load()
       val ckpt4 = Files.createTempDirectory("graft_demo_dir_ckpt").toString
       Sinks.runToCompletion(Sinks.dualSink(
-        CdcPipeline.transformPrefiltered(dirSrc, cfg), sink.url, ckpt4))
+        CdcPipeline.transformPrefiltered(dirSrc, cfg), sink.url, ckpt4,
+        q = tempQueue("graft_demo_dir_queue")))
       println(s"rotating-set delivered total=${sink.captured.size}")
 
       // RAW WIRE BYTES (the reference's actual input): a binlog-format file
@@ -165,7 +169,8 @@ object Demo {
             from_json(get_json_object(col("chg"), "$.after"), mapT).as("after"), col("ts"))
         val ckpt5 = Files.createTempDirectory("graft_demo_binlog_ckpt").toString
         Sinks.runToCompletion(Sinks.dualSink(
-          CdcPipeline.transform(changes, cfg), sink.url, ckpt5))
+          CdcPipeline.transform(changes, cfg), sink.url, ckpt5,
+          q = tempQueue("graft_demo_binlog_queue")))
         println(s"binlog-wire delivered total=${sink.captured.size}")
       }
 

@@ -27,8 +27,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * index, so no emission ever re-sorts it. The KS arithmetic is unchanged
   * and exact — max |cum₁·n₂ − cum₂·n₁| in integers, ppm by floor division
   * — so `StreamingDriftSpec` still pins the final click-arm snapshot EQUAL
-  * to the batch `agg_ks_drift` answer, and `ThroughputBench` prints the
-  * monitor's measured events/s.
+  * to the batch `agg_ks_drift` answer.
   *
   * Emission per (arm, micro-batch) is append-safe: a snapshot is an
   * immutable fact about the arm's state at that batch.

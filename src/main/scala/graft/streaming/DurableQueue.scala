@@ -13,9 +13,11 @@ import scala.jdk.CollectionConverters._
   * per partition task (executor-side — no rows through the driver) and the
   * drain worker (R15, `main.go:383-419`) consumes via [[DurableQueue.drain]].
   *
-  * Two impls: [[InProcessQueue]] (test stand-in, same JVM only) and
-  * [[FileQueue]] (durable; point `dir` at shared storage — DFS/NFS — on a
-  * real cluster, exactly as one does for checkpoint locations).
+  * Two impls: [[FileQueue]] (durable segments; point `dir` at shared
+  * storage — DFS/NFS — on a real cluster, exactly as one does for
+  * checkpoint locations) and [[RedisQueue]] (the reference's list itself).
+  * The caller always passes the queue in: no delivery state lives in a
+  * JVM, so every executor of a cluster writes to the same queue.
   */
 trait QueueClient {
   def enqueue(group: String, payload: String): Unit
@@ -28,7 +30,7 @@ trait QueueClient {
   /** Discard everything enqueued so far — called when the partition task
     * FAILS, so a half-written attempt is never published (Spark's retry
     * produces the complete segment instead). Impls whose enqueue is
-    * immediately visible (the in-process test queue) cannot un-publish;
+    * immediately visible ([[RedisQueue]]'s `RPUSH`) cannot un-publish;
     * there abort is a no-op and retries surface as at-least-once
     * duplicates, which the delivery contract already tolerates.
     */
@@ -49,25 +51,6 @@ trait DurableQueue extends Serializable {
 
   /** Items currently queued (diagnostic/test surface). */
   def pending: Long
-}
-
-/** In-process queue over [[Sinks.queue]] — the unit-spec stand-in. Only
-  * correct when executors share the driver JVM (local mode); a cluster needs
-  * [[FileQueue]]. Kept because every delivery spec asserts against it.
-  */
-object InProcessQueue extends DurableQueue {
-  override def client(): QueueClient = new QueueClient {
-    override def enqueue(group: String, payload: String): Unit =
-      Sinks.queue.add((group, payload))
-    override def close(): Unit = ()
-  }
-  override def drain(handle: (String, String) => Unit): Long = {
-    var n = 0L
-    var item = Sinks.queue.poll()
-    while (item != null) { handle(item._1, item._2); n += 1; item = Sinks.queue.poll() }
-    n
-  }
-  override def pending: Long = Sinks.queue.size.toLong
 }
 
 /** File-backed queue: each partition task writes its items to a private temp

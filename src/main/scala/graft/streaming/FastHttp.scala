@@ -1,8 +1,10 @@
 package graft.streaming
 
 import java.io.{BufferedInputStream, EOFException, IOException, InputStream, OutputStream}
-import java.net.{InetSocketAddress, Socket, URI}
+import java.net.{InetSocketAddress, Socket, SocketTimeoutException, URI}
 import java.nio.charset.StandardCharsets
+
+import scala.util.Try
 
 /** Minimal keep-alive HTTP/1.1 POST client for the delivery hot path.
   *
@@ -30,13 +32,18 @@ object FastHttp {
   }
 
   /** POST `body` to `url`; returns the status code, or -1 on transport
-    * failure (one silent reconnect attempt per call).
+    * failure. The request is sent a second time only when the server cannot
+    * have it: the connect failed before any byte was written, or a pooled
+    * keep-alive connection broke because the server had closed it while
+    * idle. A read timeout, or a fresh connection that breaks after the
+    * write, may mean the server got the request, so it is not re-sent.
     */
   def post(url: String, body: String): Int = {
     val u = URI.create(url)
     val port = if (u.getPort >= 0) u.getPort else 80
     val key = s"${u.getHost}:$port"
     val pool = conns.get()
+    def drop(): Unit = pool.remove(key).foreach(_.close())
 
     def attempt(c: Conn): Int = {
       val payload = body.getBytes(StandardCharsets.UTF_8)
@@ -52,7 +59,7 @@ object FastHttp {
       c.out.write(req) // one write → one segment → no delayed-ACK stall
       c.out.flush()
       val (status, reusable) = readResponse(c.in)
-      if (!reusable) pool.remove(key).foreach(_.close())
+      if (!reusable) drop()
       status
     }
 
@@ -62,16 +69,16 @@ object FastHttp {
       c
     }
 
-    try attempt(pool.getOrElse(key, fresh()))
-    catch {
-      case _: Exception =>
-        pool.remove(key).foreach(_.close())
-        try attempt(fresh())
+    def once(c: => Conn): Int = try attempt(c) catch { case _: Exception => drop(); -1 }
+
+    pool.get(key) match {
+      case Some(c) =>
+        try attempt(c)
         catch {
-          case _: Exception =>
-            pool.remove(key).foreach(_.close())
-            -1
+          case _: SocketTimeoutException => drop(); -1
+          case _: Exception => drop(); once(fresh()) // stale keep-alive
         }
+      case None => once(Try(fresh()).getOrElse(fresh())) // a failed connect wrote nothing
     }
   }
 

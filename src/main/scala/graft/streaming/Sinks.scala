@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
@@ -34,65 +32,69 @@ object Sinks {
     else !checkStatus || (status >= 200 && status < 300)
   }
 
-  /** The one HTTP POST loop: partition the batch by group, POST each row,
-    * and hand `(group, payload, delivered)` to `onPosted` on the executor.
+  /** The one HTTP POST loop: partition the batch by group and POST each row
+    * on the executor. With a `dlq`, each partition task writes the rows whose
+    * POST failed to its own client of that queue.
     */
-  private def postByGroup(batch: DataFrame, postUrl: String, checkStatus: Boolean)(
-      onPosted: (String, String, Boolean) => Unit): Unit = {
+  private def postByGroup(batch: DataFrame, postUrl: String, checkStatus: Boolean,
+      dlq: Option[DurableQueue]): Unit = {
     val n = math.max(1, batch.sparkSession.sparkContext.defaultParallelism)
     batch.select(col("group"), col("payload"))
       .repartition(n, col("group"))
       .foreachPartition { rows: Iterator[Row] =>
-        rows.foreach { r =>
+        def postAll(failed: (String, String) => Unit): Unit = rows.foreach { r =>
           val (group, payload) = (r.getString(0), r.getString(1))
-          onPosted(group, payload, post(postUrl, group, payload, checkStatus))
+          if (!post(postUrl, group, payload, checkStatus)) failed(group, payload)
+        }
+        dlq match {
+          case Some(q) => withClient(q)(c => postAll(c.enqueue))
+          case None => postAll((_, _) => ())
         }
       }
   }
 
+  /** Run one partition task's writes through its own client of `q`. The
+    * client publishes on success; a failed task aborts its half-written
+    * segment and lets Spark's retry produce the complete one, so a reader
+    * never sees data from an attempt that did not finish.
+    */
+  private def withClient(q: DurableQueue)(write: QueueClient => Unit): Unit = {
+    val c = q.client()
+    try {
+      write(c)
+      c.close()
+    } catch { case e: Throwable => c.abort(); throw e }
+  }
+
   /** HTTP delivery for one micro-batch: partition by group, POST per row. */
   def httpDeliverBatch(batch: DataFrame, postUrl: String, checkStatus: Boolean): Unit =
-    postByGroup(batch, postUrl, checkStatus)((_, _, _) => ())
+    postByGroup(batch, postUrl, checkStatus, dlq = None)
 
-  /** Sink A analog (`main.go:95`): enqueue payloads to a queue — the
-    * stand-in for the reference's Redis list (`cdc_events`,
-    * `main.go:36-39`). Pluggable behind [[DurableQueue]]: the in-process
-    * impl backs the unit specs; [[FileQueue]] survives process death like
-    * the reference's Redis list does. The queue-drain second pipeline (R15)
-    * then consumes it via [[drainQueue]].
-    */
-  val queue: ConcurrentLinkedQueue[(String, String)] = new ConcurrentLinkedQueue()
-
-  /** Executor-side enqueue: one client per partition task, rows never pass
+  /** Sink A analog (`main.go:95`): enqueue payloads to the caller's queue —
+    * the stand-in for the reference's Redis list (`cdc_events`,
+    * `main.go:36-39`). [[FileQueue]] survives process death like the
+    * reference's list does; [[RedisQueue]] is that list. The queue-drain
+    * second pipeline (R15) then consumes it via [[queueStream]] or
+    * [[drainQueue]].
+    *
+    * Executor-side enqueue: one client per partition task, rows never pass
     * through the driver (the r2 driver-side `collect()` made the driver the
     * throughput ceiling of sink A while the HTTP sink was per-partition).
     */
-  def queueDeliverBatch(batch: DataFrame, q: DurableQueue = InProcessQueue): Unit =
+  def queueDeliverBatch(batch: DataFrame, q: DurableQueue): Unit =
     batch.select(col("group"), col("payload")).foreachPartition { rows: Iterator[Row] =>
-      val c = q.client()
-      // Publish only on success: a failed task aborts its half-written
-      // segment and lets Spark's retry produce the complete one, so the
-      // drain never sees data from an attempt that did not finish.
-      try {
-        rows.foreach(r => c.enqueue(r.getString(0), r.getString(1)))
-        c.close()
-      } catch { case e: Throwable => c.abort(); throw e }
+      withClient(q)(c => rows.foreach(r => c.enqueue(r.getString(0), r.getString(1))))
     }
 
-  /** Dead-letter queue for fixed-mode delivery: failed POSTs (transport
-    * error or non-2xx when `checkStatus`) land here instead of vanishing —
-    * the reference's direct path has no retry or dead-lettering at all
-    * (hazard H4; `main.go:108-111` just logs).
+  /** HTTP delivery with dead-lettering (fixed mode): a failed POST
+    * (transport error or non-2xx) is written to `dlq` on the executor
+    * instead of vanishing — the reference's direct path has no retry or
+    * dead-lettering at all (hazard H4; `main.go:108-111` just logs). A
+    * [[FileQueue]] DLQ holds `q-*.seg` segments, so [[queueStream]]
+    * redrives it like the queue leg.
     */
-  val deadLetters: ConcurrentLinkedQueue[(String, String)] = new ConcurrentLinkedQueue()
-
-  /** HTTP delivery with dead-lettering: like `httpDeliverBatch` but failures
-    * are captured for redelivery/inspection.
-    */
-  def httpDeliverBatchDlq(batch: DataFrame, postUrl: String): Unit =
-    postByGroup(batch, postUrl, checkStatus = true) { (group, payload, delivered) =>
-      if (!delivered) deadLetters.add((group, payload))
-    }
+  def httpDeliverBatchDlq(batch: DataFrame, postUrl: String, dlq: DurableQueue): Unit =
+    postByGroup(batch, postUrl, checkStatus = true, Some(dlq))
 
   /** The queue-drain second pipeline (R15, reference `main.go:383-419`):
     * pop everything currently queued and POST each payload again —
@@ -100,9 +102,13 @@ object Sinks {
     * worker (`extractTableNameFromPayload`, `main.go:421-430`), so a table
     * unmapped between enqueue and drain is dropped, not crashed (H7 fixed:
     * unparsable payloads are skipped).
+    *
+    * The only drain that can read a [[RedisQueue]]: the reference's list
+    * holds bare payloads with no group, so the group must be re-derived
+    * from each payload; [[queueStream]] reads [[FileQueue]] segments only.
     */
   def drainQueue(postUrl: String, tableToGroup: Map[String, String],
-      checkStatus: Boolean = false, q: DurableQueue = InProcessQueue): Int = {
+      q: DurableQueue, checkStatus: Boolean = false): Int = {
     val tableRe = """"source":\{"table":"([^"]+)"\}""".r
     var n = 0
     q.drain { (_, payload) =>
@@ -136,14 +142,14 @@ object Sinks {
   /** Wire the dual-sink topology (H3: every event delivered on BOTH paths)
     * onto a streaming envelope DataFrame. One streaming query, one
     * `foreachBatch` writing to both sinks — at-least-once ×2 like the
-    * reference, minus its crash-replay window.
+    * reference, minus its crash-replay window. The HTTP leg is faithful
+    * mode: the response status is ignored (H4).
     */
   def dualSink(
       envelopes: DataFrame,
       postUrl: String,
       checkpointDir: String,
-      checkStatus: Boolean = false,
-      q: DurableQueue = InProcessQueue): DataStreamWriter[Row] =
+      q: DurableQueue): DataStreamWriter[Row] =
     envelopes.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -151,7 +157,7 @@ object Sinks {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val cached = batch.persist()
         try {
-          httpDeliverBatch(cached, postUrl, checkStatus)
+          httpDeliverBatch(cached, postUrl, checkStatus = false)
           queueDeliverBatch(cached, q)
         } finally { cached.unpersist(); () }
       }

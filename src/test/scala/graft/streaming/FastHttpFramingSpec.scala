@@ -8,9 +8,10 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `FastHttp` frames each response per HTTP/1.1, so a keep-alive
-  * connection stays in step and a request is never sent twice. Each case
-  * is a raw-socket server that answers every request with one fixed byte
-  * string; the server must receive exactly the posts made.
+  * connection stays in step, and it re-sends a request only when the server
+  * cannot have it. Each case is a raw-socket server that answers every
+  * request with one fixed byte string; the server must receive exactly the
+  * posts made.
   */
 class FastHttpFramingSpec extends AnyFunSuite {
 
@@ -97,5 +98,31 @@ class FastHttpFramingSpec extends AnyFunSuite {
       "HTTP/1.1 204 No Content\r\nTransfer-Encoding: chunked\r\n\r\n")
     assert(statuses == Seq.fill(10)(204))
     assert(received == 10, s"the server received $received requests for 10 posts")
+  }
+
+  test("a fresh connection closed after the request is read is not re-sent") {
+    val server = new RawServer("", close = true)
+    try {
+      assert(FastHttp.post(server.url, """{"n":1}""") == -1)
+      assert(server.received.get == 1, s"the server received ${server.received.get} requests for 1 post")
+    } finally {
+      FastHttp.closeAll()
+      server.stop()
+    }
+  }
+
+  test("a keep-alive connection the server closed while idle is retried once") {
+    val server = new RawServer("HTTP/1.1 200 OK\r\nContent-Length: 2\r\n\r\nok", close = true)
+    try {
+      val statuses = (1 to 3).map { i =>
+        Thread.sleep(50) // the server closes the pooled connection meanwhile
+        FastHttp.post(server.url, s"""{"n":$i}""")
+      }
+      assert(statuses == Seq.fill(3)(200))
+      assert(server.received.get == 3, s"the server received ${server.received.get} requests for 3 posts")
+    } finally {
+      FastHttp.closeAll()
+      server.stop()
+    }
   }
 }

@@ -1,15 +1,23 @@
 package graft.streaming
 
+import java.lang.management.ManagementFactory
+import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSuite
 
 /** Tier C joins: stream-stream inner join with event-time range constraint
   * (watermark-bounded state on both sides), and stream-static broadcast
-  * enrichment.
+  * enrichment; and fixed-mode delivery's dead-letter queue, redriven
+  * through `Sinks.queueStream`.
   */
 class StreamJoinSpec extends SparkSuite {
 
@@ -69,24 +77,121 @@ class StreamJoinSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  /** Redrive a [[FileQueue]] DLQ: its segments as a streaming source, each
+    * row POSTed again in fixed mode; rows that fail again land in `again`.
+    */
+  private def redrive(dlq: FileQueue, url: String, again: DurableQueue): Unit =
+    Sinks.runToCompletion(Sinks.queueStream(spark, dlq.dir).writeStream
+      .option("checkpointLocation", Files.createTempDirectory("dlq_redrive_ckpt").toString)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: DataFrame, _: Long) => Sinks.httpDeliverBatchDlq(b, url, again) })
+
+  private def tempQueue(name: String) = FileQueue(Files.createTempDirectory(name).toString)
+
   test("fixed-mode delivery dead-letters failed POSTs") {
     import spark.implicits._
     val server = new DebugSink
     try {
-      Sinks.deadLetters.clear()
       server.respondStatus = 500 // every POST fails the 2xx check
-      val batch = Seq(("g1", """{"a":1}"""), ("g2", """{"a":2}"""))
-        .toDF("group", "payload")
-      Sinks.httpDeliverBatchDlq(batch, server.url)
-      assert(Sinks.deadLetters.size == 2)
+      val rows = Seq(("g1", """{"a":1}"""), ("g2", """{"a":2}"""))
+      val dlq = tempQueue("dlq_fixed")
+      Sinks.httpDeliverBatchDlq(rows.toDF("group", "payload"), server.url, dlq)
+      assert(dlq.pending == 2)
       // recover: flip the sink healthy and redrive the dead letters
       server.respondStatus = 200
-      val redriven = Sinks.deadLetters.toArray(Array.empty[(String, String)])
-      Sinks.deadLetters.clear()
-      redriven.foreach { case (g, p) =>
-        assert(Sinks.post(server.url, g, p, checkStatus = true))
-      }
+      val again = tempQueue("dlq_fixed_again")
+      redrive(dlq, server.url, again)
+      assert(again.pending == 0) // every redriven POST got a 2xx
       assert(server.captured.size == 4) // 2 failed + 2 redriven
+      assert(server.captured.asScala.map(_.body).toSeq.sorted ==
+        (rows ++ rows).map(_._2).sorted)
     } finally server.stop()
   }
+
+  test("a failed dead-lettering task publishes nothing; after Spark's retry each row is dead-lettered once") {
+    val server = new DebugSink
+    val dlq = tempQueue("dlq_retry")
+    val marks = Files.createTempDirectory("dlq_retry_marks")
+    try {
+      server.respondStatus = 500
+      val (exit, log) = runJvm(DlqRetryMain.getClass.getName.stripSuffix("$"),
+        server.url, dlq.dir, marks.toString)
+      assert(exit == 0, log)
+      assert(Files.exists(marks.resolve("failed")) && Files.exists(marks.resolve("retried")),
+        "no task failed and was retried")
+      val files = Files.list(Paths.get(dlq.dir)).iterator().asScala.map(_.getFileName.toString).toSeq
+      assert(files.forall(_.startsWith("q-")), s"an aborted attempt left $files")
+      assert(files.size >= 2, s"one partition task only: $files")
+      // the failed attempt wrote its first row before throwing: had it
+      // published, that row would be here twice
+      val dead = files.flatMap(f => Files.readAllLines(Paths.get(dlq.dir, f)).asScala)
+      assert(dead.sorted == DlqRetryMain.rows.map { case (g, p) => s"$g\t$p" }.sorted)
+
+      server.respondStatus = 200
+      val before = server.captured.size
+      val again = tempQueue("dlq_retry_again")
+      redrive(dlq, server.url, again)
+      assert(again.pending == 0)
+      assert(server.captured.size == before + DlqRetryMain.rows.size)
+    } finally server.stop()
+  }
+
+  /** Runs `main` in a child JVM on this JVM's classpath and options; its
+    * exit code and output.
+    */
+  private def runJvm(main: String, args: String*): (Int, String) = {
+    val java = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val opts = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+      .filter(o => o.startsWith("--add-opens") || o.startsWith("-D"))
+    val out = Files.createTempFile("child_jvm", ".log")
+    val p = new ProcessBuilder((Seq(java, "-Xmx1g") ++ opts ++
+        Seq("-cp", System.getProperty("java.class.path"), main) ++ args).asJava)
+      .redirectErrorStream(true).redirectOutput(out.toFile).start()
+    val exit = p.waitFor()
+    (exit, Files.readString(out).takeRight(4000))
+  }
+}
+
+/** The child-JVM half of [[StreamJoinSpec]]'s task-retry case: Spark
+  * retries a failed task only under a `local[N,F]` master, and the shared
+  * test session is `local[4]`. Dead-letters [[rows]] (POSTed to `args(0)`)
+  * into the [[FileQueue]] at `args(1)` through [[FailOnce]], with its
+  * marker files in `args(2)`.
+  */
+object DlqRetryMain {
+  val rows: Seq[(String, String)] = (1 to 16).map(i => (s"g${i % 8}", s"""{"a":$i}"""))
+
+  def main(args: Array[String]): Unit = {
+    val Array(url, dlqDir, marks) = args
+    val spark = graft.Tables.sessionBuilder("local[2,2]", 2).getOrCreate()
+    try {
+      import spark.implicits._
+      Sinks.httpDeliverBatchDlq(rows.toDF("group", "payload"), url, FailOnce(FileQueue(dlqDir), marks))
+    } finally spark.stop()
+  }
+}
+
+/** A DLQ whose first task to write a row throws right after writing it,
+  * once per job (the `failed` marker file claims the failure); a retried
+  * attempt touches `retried` and runs clean.
+  */
+final case class FailOnce(inner: DurableQueue, marks: String) extends DurableQueue {
+  override def client(): QueueClient = new QueueClient {
+    private val c = inner.client()
+    override def enqueue(group: String, payload: String): Unit = {
+      c.enqueue(group, payload)
+      if (TaskContext.get().attemptNumber() > 0) mark("retried")
+      else if (mark("failed")) throw new IllegalStateException("injected task failure")
+    }
+    override def close(): Unit = c.close()
+    override def abort(): Unit = c.abort()
+  }
+
+  /** Creates the marker; false when it already existed. */
+  private def mark(name: String): Boolean =
+    try { Files.createFile(Paths.get(marks, name)); true }
+    catch { case _: FileAlreadyExistsException => false }
+
+  override def drain(handle: (String, String) => Unit): Long = inner.drain(handle)
+  override def pending: Long = inner.pending
 }

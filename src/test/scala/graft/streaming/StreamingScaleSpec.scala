@@ -36,19 +36,19 @@ class StreamingScaleSpec extends SparkSuite {
       CdcQueries.tableToGroup.keys.exists(t => l.contains(s""""table":"$t""""))
     }
     val sink = new DebugSink
+    val qdir = Files.createTempDirectory("cdc_scale_queue").toString
     try {
-      Sinks.queue.clear()
       val src = spark.readStream.format(classOf[graft.sources.CdcFileSource].getName)
         .option("path", log.toString).load()
       val env = CdcPipeline.transform(CdcPipeline.parseLines(src), cfg)
       val ckpt = Files.createTempDirectory("cdc_scale_ckpt").toString
       val t0 = System.nanoTime()
-      Sinks.runToCompletion(Sinks.dualSink(env, sink.url, ckpt))
+      Sinks.runToCompletion(Sinks.dualSink(env, sink.url, ckpt, q = FileQueue(qdir)))
       val sec = (System.nanoTime() - t0) / 1e9
       info(f"delivered ${sink.captured.size} events in $sec%.1fs " +
         f"(${sink.captured.size / sec}%.0f events/s incl. engine overhead)")
       assert(sink.captured.size == expected, s"expected $expected")
-      assert(Sinks.queue.size == expected)
+      assert(FileQueue(qdir).pending == expected)
       // every delivery hit a routed path
       val paths = sink.captured.toArray(Array.empty[sink.Captured]).map(_.path).toSet
       assert(paths.subsetOf(Set("/grp_engage", "/grp_convert")), paths.toString)
@@ -126,14 +126,14 @@ class StreamingScaleSpec extends SparkSuite {
   test("empty input: transform and sinks are no-ops, not failures") {
     val log = Files.createTempFile("cdc_empty_log", ".jsonl")
     val sink = new DebugSink
+    val qdir = Files.createTempDirectory("cdc_empty_queue").toString
     try {
-      Sinks.queue.clear()
       val src = spark.readStream.format(classOf[graft.sources.CdcFileSource].getName)
         .option("path", log.toString).load()
       val env = CdcPipeline.transform(CdcPipeline.parseLines(src), cfg)
       val ckpt = Files.createTempDirectory("cdc_empty_ckpt").toString
-      Sinks.runToCompletion(Sinks.dualSink(env, sink.url, ckpt))
-      assert(sink.captured.isEmpty && Sinks.queue.isEmpty)
+      Sinks.runToCompletion(Sinks.dualSink(env, sink.url, ckpt, q = FileQueue(qdir)))
+      assert(sink.captured.isEmpty && FileQueue(qdir).pending == 0)
     } finally sink.stop()
   }
 }

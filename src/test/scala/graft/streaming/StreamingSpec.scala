@@ -105,14 +105,14 @@ class StreamingSpec extends SparkSuite {
   test("dual sink delivers to HTTP (routed path) AND queue; H4 faithful mode ignores 500s") {
     import spark.implicits._
     val server = new DebugSink
+    val qdir = Files.createTempDirectory("graft_dual_queue").toString
     try {
-      Sinks.queue.clear()
       implicit val sqlCtx = spark.sqlContext
       val mem = MemoryStream[ChangeEvent]
       mem.addData(fixture: _*)
       val env = CdcPipeline.transform(mem.toDF(), cfg)
       val ckpt = Files.createTempDirectory("graft_ckpt").toString
-      Sinks.runToCompletion(Sinks.dualSink(env, server.url, ckpt))
+      Sinks.runToCompletion(Sinks.dualSink(env, server.url, ckpt, q = FileQueue(qdir)))
       // HTTP path: 3 deliveries, path = /<group> (`main.go:105`)
       val posts = server.captured.toArray(Array.empty[server.Captured])
       assert(posts.length == 3)
@@ -120,7 +120,7 @@ class StreamingSpec extends SparkSuite {
       assert(posts.forall(_.method == "POST"))
       assert(posts.forall(_.body.contains(""""source":{"table":""")))
       // queue path: same 3 payloads (H3: ≥2 deliveries per event)
-      assert(Sinks.queue.size == 3)
+      assert(FileQueue(qdir).pending == 3)
 
       // H4: a 500 response still counts as delivered in faithful mode
       server.respondStatus = 500
@@ -131,8 +131,8 @@ class StreamingSpec extends SparkSuite {
       // R15: the queue-drain second pipeline re-POSTs everything queued,
       // re-resolving the group from the payload (at-least-once ×2, H3)
       val before = server.captured.size
-      val drained = Sinks.drainQueue(server.url, cfg.tableToGroup)
-      assert(drained == 3 && Sinks.queue.isEmpty)
+      val drained = Sinks.drainQueue(server.url, cfg.tableToGroup, q = FileQueue(qdir))
+      assert(drained == 3 && FileQueue(qdir).pending == 0)
       assert(server.captured.size == before + 3)
     } finally server.stop()
   }
