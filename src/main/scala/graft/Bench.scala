@@ -53,6 +53,12 @@ object Bench {
       wallSec: Double, budgetSec: Double, calib: Seq[Double]): Boolean =
     wallSec >= idxWarnFactor * idxExpected(budgetSec, calib)
 
+  /** Index-phase workers: the old hand-wired schedule ran up to five
+    * builds at once (a 4-worker pool plus a dedicated graph thread), and
+    * on a 4-core box widths 4 and 5 measured within each other's spread.
+    */
+  private val idxWidth = 5
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
@@ -62,22 +68,8 @@ object Bench {
     // from neighboring queries) — a phantom "regression" a median of 5
     // absorbs. Costs ~2 min at sf0.1; correctness of deltas depends on it.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt)
-    val spark = Tables.sessionBuilder(s"local[$cpus]", cpus)
-      // Index-phase scheduling (r19): the phase runs 8 concurrent artifact
-      // chains; under the default FIFO job queue the LATENCY-bound chains
-      // (price, ivf — many small sequential jobs) queue their every stage
-      // behind the corpus-size stages of the throughput chains and
-      // stretch 3-4× (price_quantiles 4.7 s isolated → 15.0 s pooled,
-      // r19 IndexProbe decomposition). FAIR round-robins the task slots
-      // across the running jobs, so a 0.3 s job does not wait out a 5 s
-      // stage. That was the theory — the A/B MEASURED FAIR LOSING
-      // decisively: phase 37.6 s vs FIFO's 24.2 on the same box (equal
-      // slot shares slow every chain's wide stages; FIFO drains the
-      // heavy chains at full width and backfills small jobs into their
-      // barrier gaps). FIFO stays; the knob remains for re-measurement.
-      .config("spark.scheduler.mode",
-        sys.env.getOrElse("SPARK_GRAFT_SCHED", "FIFO"))
-      .getOrCreate()
+    // FIFO (Spark's default), not FAIR: the index phase measured 37.6 s under FAIR, 24.2 s under FIFO
+    val spark = Tables.sessionBuilder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The dedup family's bounded-iteration pattern unpersists locally
     // checkpointed per-round RDDs by design; Spark logs one WARN per RDD
@@ -121,144 +113,12 @@ object Bench {
       case e: Throwable => System.err.println(s"[bench] warmup failed (continuing): $e")
     }
     val warmSec = (System.nanoTime() - warmT0) / 1e9
-    // The dedup and vector index families touch disjoint tables, so they
-    // warm CONCURRENTLY (and the dedup builder parallelizes its own
-    // independent chains internally); the curation-stage checkpoints (the
-    // third session artifact family) ride the main thread after dedup.
-    // Per-item numbers are each build's own wall under concurrency;
-    // `index_build_sec` is the PHASE wall — the time the suite actually
-    // waits, the number the r9 verdict asked to halve (a sum of
-    // overlapping walls would double-count). Each family fails
-    // independently, and the vector future is ALWAYS awaited — an
-    // abandoned build would keep training codebooks underneath the
-    // calibration samples and the first timed reps, silently poisoning
-    // the very numbers calib exists to defend.
-    // r14 (the r13 verdict's ask #1 — the phase wall measured 16.0 s on
-    // one run and 60.7 s on a re-run of IDENTICAL code): the r13 phase
-    // launched all nine artifact chains at once on the unbounded global
-    // pool, and when the heavy chains co-scheduled cold they fought over
-    // execution memory and task slots — every chain's wall inflated 4-7×
-    // (recall_pairs 6.6 → 47 s, graph_tri_edges <6 → 46 s), and under a
-    // smaller heap the contention is an outright SparkOutOfMemoryError
-    // (reproduced at -Xmx8g). The phase now runs on a FIXED 3-WORKER pool
-    // with chains submitted heaviest-first (LPT): at most three job DAGs
-    // share the executor threads and the memory pool at any moment, the
-    // two heaviest chains never co-schedule with six others, and the
-    // makespan stays near sum(isolated walls)/3 instead of
-    // max(inflated chain walls). Chain set and per-item timing are
-    // unchanged — only the schedule is.
+    // The index phase (graft.ops.IndexPhase): every declared artifact,
+    // each timed on its own; `index_build_sec` is the PHASE wall — the
+    // time the suite actually waits (a sum of overlapping walls would
+    // double-count). A failed build is logged and skipped.
     val idxT0 = System.nanoTime()
-    val indexBuild: Seq[(String, Double)] = {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      // pool width is a measured knob (SPARK_GRAFT_IDX_WORKERS): r14
-      // fixed it at 3 when the chains were fewer and heavier; the r16
-      // chain set (split gram halves, merged price selection, leaner
-      // decomposition kernels) repacks better at 4 — re-measure when the
-      // chain set changes materially
-      val nWorkers = sys.env.getOrElse("SPARK_GRAFT_IDX_WORKERS", "4").toInt
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(nWorkers)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      def safe(label: String)(f: => Seq[(String, Double)]): Seq[(String, Double)] =
-        try f catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] $label index build failed (continuing): $e")
-            Seq.empty
-        }
-      // THE CRITICAL PATH GETS ITS OWN THREAD (r18 — the r17 verdict's #1
-      // ask, the third round this phase was the top unmet bar): the
-      // phase's longest dependency chain is graph base (edges → degrees →
-      // triangles → support) → truss peel → coreness peel, and the r17
-      // schedule queued the two peels LAST on the FIFO pool — so the
-      // single-task truss kernel started only after the queue drained and
-      // its (contention-inflated) wall EXTENDED the phase tail (6.4 s
-      // pooled vs 2.96 isolated; the phase ended on it). The chain now
-      // runs SEQUENTIALLY on a dedicated thread from t = 0: each peel
-      // starts the instant its inputs exist and overlaps the wide chains
-      // instead of appending to them. The pool width for the remaining
-      // chains is unchanged — total in-flight chains stay ≤ nWorkers + 1,
-      // and the dedicated thread spends most of its life in narrow or
-      // single-task stages.
-      val graphPool = java.util.concurrent.Executors.newFixedThreadPool(1)
-      lazy val sharedEc: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val gra = Future {
-        val core = safe("graph_core")(graft.ops.GraphQueries.warmCachesCore(spark, sfDir))
-        // the light independent leg — ranked adjacency + the coreness
-        // peel, both needing only edges+degrees — packs onto the SHARED
-        // pool so the spine below (triangles → support → truss, the
-        // phase's measured critical path: 19.0 s when fully serial) is
-        // 2-3 s shorter on the dedicated thread
-        val side = Future(
-          safe("graph_adj")(graft.ops.GraphQueries.warmCachesAdjacency(spark, sfDir)) ++
-            safe("graph_coreness")(graft.ops.GraphQueries.warmCachesCoreness(spark, sfDir)))(sharedEc)
-        val spine =
-          safe("graph_tri")(graft.ops.GraphQueries.warmCachesTriangles(spark, sfDir)) ++
-            safe("graph_truss")(graft.ops.GraphQueries.warmCachesTruss(spark, sfDir))
-        core ++ spine ++
-          (try Await.result(side, Duration.Inf) catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] graph side leg failed (continuing): $e")
-              Seq.empty
-          })
-      }(ExecutionContext.fromExecutor(graphPool))
-      // Submission order IS execution order on the FIFO pool — heaviest
-      // isolated walls first (measured at sf0.1/calib~0.4: vector ≈ 14 s
-      // with the recall ground truth, price ≈ 13, dedup core + curation
-      // ≈ 15, then the light chains). The dedup chain's internal
-      // cosine/containment side futures (warmCachesSplit) land on this
-      // same bounded pool, so total in-flight chains never exceed the
-      // workers.
-      // dedup's jaccard CORE must precede curation (shingles + component
-      // labels are its inputs); the containment/cosine side chains queue
-      // onto the pool from inside warmCachesSplit.
-      val ded = Future {
-        val (core, sides) =
-          try graft.ops.DedupQueries.warmCachesSplit(spark, sfDir)
-          catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] dedup index build failed (continuing): $e")
-              (Seq.empty[(String, Double)],
-                Future.successful(Seq.empty[(String, Double)]))
-          }
-        val cur = safe("curation") {
-          val t0 = System.nanoTime()
-          CurationPipeline.stages(spark, sfDir) // eager checkpoints, cached
-          Seq("curation_stages" -> (System.nanoTime() - t0) / 1e9)
-        }
-        (core ++ cur, sides)
-      }
-      val vec = Future(safe("vector")(graft.ops.VectorQueries.warmCaches(spark, sfDir)))
-      val pri = Future(safe("price_stats")(graft.ops.AdvancedQueries.warmCaches(spark, sfDir)))
-      // the shared n-gram corpus artifacts (r15) precede the text/mining
-      // consumers: the curation span stage (inside the dedup future)
-      // consumes pos_grams, and the text chain's LM trains from
-      // doc_trigrams — building them on an early worker means those
-      // chains reuse instead of blocking on a cold build mid-chain;
-      // the two gram halves are independent corpus passes — separate
-      // chain tasks pack onto different workers (r16)
-      val gram = Future(safe("gram_index")(graft.ops.GramIndex.warmCachesWord(spark, sfDir)))
-      val gramC = Future(safe("gram_char")(graft.ops.GramIndex.warmCachesChar(spark, sfDir)))
-      val min = Future(safe("mining")(graft.ops.MiningQueries.warmCaches(spark, sfDir)))
-      val tex = Future(safe("text")(graft.ops.TextQueries.warmCaches(spark, sfDir)))
-      val dri = Future(safe("drift")(graft.ops.MiningQueries.warmCachesDrift(spark, sfDir)))
-      val await = Seq(gra, vec, pri, gram, gramC, min, tex, dri) ++
-        (try {
-          val (dedMain, dedSides) = Await.result(ded, Duration.Inf)
-          Seq(Future.successful(dedMain), dedSides)
-        } catch {
-          case e: Throwable =>
-            System.err.println(s"[bench] dedup chain failed (continuing): $e")
-            Seq.empty
-        })
-      val out = await.flatMap(a => try Await.result(a, Duration.Inf) catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] index build failed (continuing): $e")
-          Seq.empty
-      })
-      pool.shutdown()
-      graphPool.shutdown()
-      out
-    }
+    val indexBuild = graft.ops.IndexPhase.run(spark, sfDir, idxWidth)
     val indexWallSec = (System.nanoTime() - idxT0) / 1e9
     // Calib-scaled budget guard (r13 verdict ask #1): a run whose wall
     // exceeds 2× the calib-scaled budget is flagged loudly (stderr + a

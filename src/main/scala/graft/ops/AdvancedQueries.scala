@@ -320,22 +320,11 @@ object AdvancedQueries {
       scala.jdk.CollectionConverters.SeqHasAsJava(entry._1).asJava, entry._2)
   }
 
-  /** Build + collect the price-statistics artifact, timed for the bench
-    * (`index_build` entry `price_quantiles`), like the other families'
-    * session indexes.
-    */
-  def warmCaches(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    priceStats(s, dir)
-    val t1 = System.nanoTime()
-    trimStats(s, dir)
-    val t2 = System.nanoTime()
-    spearmanGrains(s, dir)
-    val t3 = System.nanoTime()
-    Seq("price_quantiles" -> (t1 - t0) / 1e9,
-      "trim_cutoffs" -> (t2 - t1) / 1e9,
-      "spearman_grains" -> (t3 - t2) / 1e9)
-  }
+  /** The price-statistics [[IndexPhase]] artifacts, one chain. */
+  private[ops] val indexArtifacts: Seq[IndexArtifact] = Seq(
+    IndexArtifact("price_quantiles", Nil, (s, dir) => priceStats(s, dir)),
+    IndexArtifact("trim_cutoffs", Seq("price_quantiles"), (s, dir) => trimStats(s, dir)),
+    IndexArtifact("spearman_grains", Seq("trim_cutoffs"), (s, dir) => spearmanGrains(s, dir)))
 
   /** Per-group trim statistics for `agg_trimmed_mean` — (n, tot, d, vlo,
     * vhi): group size, exact DECIMAL(38,0) cents total, the n div 20 trim

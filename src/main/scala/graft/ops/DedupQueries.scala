@@ -215,78 +215,30 @@ object DedupQueries {
       .orderBy("doc_id")
   }
 
-  /** Build every session-lifetime dedup index untimed and return each
-    * build's wall seconds keyed by index name. The bench emits this map as
-    * `index_build` in its JSON so the measurement boundary — indexes
-    * amortized once per session, query medians timing the consuming plans —
-    * stays visible and cross-round comparable no matter where the boundary
-    * sits (the r6 lesson: folding ~20 s of index builds into one opaque
-    * `warm_sec` lump made the headline total incomparable with r5).
-    */
-  def warmCaches(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    import scala.concurrent.{Await, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val (core, sides) = warmCachesSplit(s, dir)
-    core ++ Await.result(sides, Duration.Inf)
-  }
-
-  /** The build DAG has three independent chains, so they run CONCURRENTLY
-    * (Spark's scheduler interleaves their stages across the executor
-    * cores — concurrent jobs on one session are the supported pattern):
+  /** The dedup family's [[IndexPhase]] artifacts, three chains:
     *
     *   text chain:   shingles → doc_index → pairs_jaccard → comp_jaccard
     *   text side:    (after doc_index) pairs_containment → bloom_sketch
     *   cosine chain: pairs_cosine → comp_cosine   (embeddings only — no
     *                 shingle dependency at all)
     *
-    * r9 ran all eight sequentially: 22.5 s of wall for ~13 s of critical
-    * path. Each reported number is that build's own wall under
-    * concurrency; the bench reports the PHASE wall (what the suite
-    * actually waits) as index_build_sec. doc_index builds BOTH the
-    * rarity-sorted arrays and the minhash signatures in one aggregation
-    * pass (r10 — was doc_arrays + minhash_sig as two passes over the
-    * same rows).
-    *
-    * r13 splits the RETURN: the caller gets the text-chain timings as
-    * soon as `comp_jaccard` lands (everything the curation pipeline
-    * depends on), with the containment/cosine side chains still running
-    * in the returned future — the bench's curation stage no longer waits
-    * ~10 s behind side chains it never reads.
+    * doc_index builds BOTH the rarity-sorted arrays and the minhash
+    * signatures in one aggregation pass.
     */
-  def warmCachesSplit(s: SparkSession, dir: String)(
-      implicit ec: scala.concurrent.ExecutionContext)
-      : (Seq[(String, Double)], scala.concurrent.Future[Seq[(String, Double)]]) = {
-    import scala.concurrent.Future
-    val out = new java.util.concurrent.ConcurrentLinkedQueue[(String, Double)]()
-    def timed(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      f
-      out.add(name -> (System.nanoTime() - t0) / 1e9)
-    }
-    val cosineChain = Future {
-      timed("pairs_cosine_0.45") { cosinePairsLsh(s, dir, 0.45).count() }
-      timed("comp_cosine_0.45") { componentsCosine(s, dir, 0.45).count() }
-    }
-    val core = Seq.newBuilder[(String, Double)]
-    def timedCore(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime()
-      f
-      core += name -> (System.nanoTime() - t0) / 1e9
-    }
-    timedCore("shingles") { shingles(s, dir).count() }
-    timedCore("doc_index") { docIndex(s, dir).count() }
-    val containChain = Future {
-      timed("pairs_containment_0.8") { containmentPairs(s, dir, 0.8).count() }
-      timed("bloom_sketch") { bloomSketch(s, dir) }
-    }
-    timedCore("pairs_jaccard_0.5") { jaccardPairsPrefix(s, dir, 0.5).count() }
-    timedCore("comp_jaccard_0.5") { componentsJaccard(s, dir, 0.5).count() }
-    import scala.jdk.CollectionConverters._
-    val sides = for { _ <- cosineChain; _ <- containChain }
-      yield out.asScala.toSeq
-    (core.result(), sides)
-  }
+  private[ops] val indexArtifacts: Seq[IndexArtifact] = Seq(
+    IndexArtifact("shingles", Nil, (s, dir) => shingles(s, dir).count()),
+    IndexArtifact("doc_index", Seq("shingles"), (s, dir) => docIndex(s, dir).count()),
+    IndexArtifact("pairs_jaccard_0.5", Seq("doc_index"),
+      (s, dir) => jaccardPairsPrefix(s, dir, 0.5).count()),
+    IndexArtifact("comp_jaccard_0.5", Seq("pairs_jaccard_0.5"),
+      (s, dir) => componentsJaccard(s, dir, 0.5).count()),
+    IndexArtifact("pairs_containment_0.8", Seq("doc_index"),
+      (s, dir) => containmentPairs(s, dir, 0.8).count()),
+    IndexArtifact("bloom_sketch", Seq("pairs_containment_0.8"),
+      (s, dir) => bloomSketch(s, dir)),
+    IndexArtifact("pairs_cosine_0.45", Nil, (s, dir) => cosinePairsLsh(s, dir, 0.45).count()),
+    IndexArtifact("comp_cosine_0.45", Seq("pairs_cosine_0.45"),
+      (s, dir) => componentsCosine(s, dir, 0.45).count()))
 
   /** Unpersist and drop every cached dedup artifact of `s` (shingle set +
     * per-doc arrays) — for long-lived services that iterate many data dirs
@@ -342,7 +294,7 @@ object DedupQueries {
     * `dedup_near_cosine_lsh`, `dedup_semantic`). CACHE POLICY (uniform for
     * every session-lifetime dedup index — shingles, doc arrays, minhash
     * signatures, pair sets, component labels): the first consumer pays the
-    * build unless the caller pre-warms via [[warmCaches]], which times each
+    * build unless the caller pre-warms via [[IndexPhase]], which times each
     * build individually so a bench can report them as a first-class
     * `index_build` map instead of burying them in query medians or an
     * opaque warmup lump. localCheckpoint materializes the tiny verified set

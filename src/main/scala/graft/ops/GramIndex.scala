@@ -19,8 +19,8 @@ import graft.Tables
   * document per rep.
   *
   * Both passes now live here as session-lifetime persisted artifacts under
-  * the uniform cache policy (one build per (session, dir), timed by the
-  * bench as first-class `index_build` entries, stopped-session entries
+  * the uniform cache policy (one build per (session, dir), timed by
+  * [[IndexPhase]] as first-class `index_build` entries, stopped-session entries
   * dropped lazily):
   *
   *   - [[posGrams]]: `(doc_id, gram, ps, c, nd, first_doc)` — every word
@@ -167,41 +167,17 @@ object GramIndex {
         .persist())
   }
 
-  /** Build + materialize every artifact, each timed for the bench's
-    * `index_build` map (entries `pos_grams` / `doc_trigrams` /
-    * `bigram_cells` / `term_counts`). A consumer racing a build just
-    * blocks on `computeIfAbsent` and reuses the winner's plan — the timed
-    * entry then reports the true build wall wherever it ran.
+  /** The [[IndexPhase]] artifacts: a WORD-grain chain (5-gram positions
+    * → bigram cells) and a CHAR-grain chain (trigram counts → vocabulary),
+    * two independent corpus passes that pack onto different workers. A
+    * consumer racing a build just blocks on `computeIfAbsent` and reuses
+    * the winner's plan.
     */
-  def warmCaches(s: SparkSession, dir: String): Seq[(String, Double)] =
-    warmCachesWord(s, dir) ++ warmCachesChar(s, dir)
-
-  /** The WORD-grain half (5-gram positions + bigram cells) — split from
-    * the char half in r16 so the bench pool can pack the two ~4 s corpus
-    * passes onto different workers instead of serializing an ~8 s chain
-    * (the artifacts are independent; consumers block on whichever cache
-    * they need).
-    */
-  def warmCachesWord(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    posGrams(s, dir).count()
-    val tGram = (System.nanoTime() - t0) / 1e9
-    val t2 = System.nanoTime()
-    bigramCells(s, dir).count()
-    val tBg = (System.nanoTime() - t2) / 1e9
-    Seq("pos_grams" -> tGram, "bigram_cells" -> tBg)
-  }
-
-  /** The CHAR-grain half (trigram counts + vocabulary). */
-  def warmCachesChar(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val t1 = System.nanoTime()
-    docTrigrams(s, dir).count()
-    val tTri = (System.nanoTime() - t1) / 1e9
-    val t3 = System.nanoTime()
-    termCounts(s, dir).count()
-    val tTc = (System.nanoTime() - t3) / 1e9
-    Seq("doc_trigrams" -> tTri, "term_counts" -> tTc)
-  }
+  private[ops] val indexArtifacts: Seq[IndexArtifact] = Seq(
+    IndexArtifact("pos_grams", Nil, (s, dir) => posGrams(s, dir).count()),
+    IndexArtifact("bigram_cells", Seq("pos_grams"), (s, dir) => bigramCells(s, dir).count()),
+    IndexArtifact("doc_trigrams", Nil, (s, dir) => docTrigrams(s, dir).count()),
+    IndexArtifact("term_counts", Seq("doc_trigrams"), (s, dir) => termCounts(s, dir).count()))
 
   /** Unpersist and drop this session's artifacts (eager release — the same
     * contract as `DedupQueries.clearCache`).

@@ -43,8 +43,8 @@ object GraphQueries {
     * boundary changes downstream join planning), while the checkpointed
     * RDD keeps the consumers' plans identical and cut the family roughly
     * in half (k-core 4.2 s, pagerank 4.4 s, triangles 4.4 s,
-    * common-neighbors 2.0 s). `warmCaches` lets the bench build and time
-    * it as a first-class `index_build` entry.
+    * common-neighbors 2.0 s). [[IndexPhase]] builds and times it as a
+    * first-class `index_build` entry.
     */
   private val edgeCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
@@ -1249,84 +1249,30 @@ object GraphQueries {
     s.createDataFrame(out, schema).localCheckpoint()
   }
 
-  def warmCaches(s: SparkSession, dir: String): Seq[(String, Double)] =
-    warmCachesBase(s, dir) ++ warmCachesDecomp(s, dir)
-
-  /** The base artifact chain: edges → degrees → triangle corners →
-    * per-edge support. [[warmCachesDecomp]] (the r14 truss/coreness
-    * fixpoints) rides on these; the bench schedules the two halves as
-    * separate chain tasks so the decomposition loops — the graph
-    * family's longest builds — pack against other families instead of
-    * serializing behind their own prerequisites' timing slot.
+  /** The graph family's [[IndexPhase]] artifacts. Edges and degrees feed
+    * every other graph artifact; the spine (triangle corners → per-edge
+    * support → truss peel) is the phase's critical path, and the ranked
+    * adjacency and the coreness peel need only edges + degrees. Above the
+    * adjacency cache gate the accessor returns the transient per-query
+    * plan, so building it would run (and then discard) the full |2E|
+    * ranking window for an artifact that is never kept: both adjacency
+    * artifacts are gated off there.
     */
-  def warmCachesBase(s: SparkSession, dir: String): Seq[(String, Double)] =
-    warmCachesCore(s, dir) ++ warmCachesTriangles(s, dir) ++
-      warmCachesAdjacency(s, dir)
-
-  /** Edges + degrees — the prerequisites of EVERY other graph artifact;
-    * split out (r18) so the bench can fork the independent legs the
-    * moment these exist: the triangle→truss spine is the phase's
-    * critical path, and the adjacency/coreness leg (which needs only
-    * these two) packs onto the shared pool instead of serializing
-    * inside the spine's thread.
-    */
-  def warmCachesCore(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    edges(s, dir).count()
-    val t1 = System.nanoTime()
-    degrees(s, dir).count()
-    Seq("graph_edges" -> (t1 - t0) / 1e9,
-      "graph_degrees" -> (System.nanoTime() - t1) / 1e9)
-  }
-
-  /** Triangle corners + per-edge support (both off the one shared wedge
-    * enumeration) — the middle of the decomposition critical path.
-    */
-  def warmCachesTriangles(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    triCorners(s, dir).count()
-    val t1 = System.nanoTime()
-    triEdgeSupport(s, dir).count()
-    Seq("graph_tri_corners" -> (t1 - t0) / 1e9,
-      "graph_tri_edges" -> (System.nanoTime() - t1) / 1e9)
-  }
-
-  /** The ranked adjacency, gate-respecting: above the adjacency cache
-    * gate the accessor returns the transient per-query plan — warming
-    * would execute (and then discard) the full |2E| ranking window for
-    * an artifact that is never retained (r15 ADVICE), so the warm step
-    * mirrors the gate and skips.
-    */
-  def warmCachesAdjacency(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    if (adjCacheGated(s, dir)) return Seq.empty
-    val t0 = System.nanoTime()
-    rankedAdjacency(s, dir).count()
-    val t1 = System.nanoTime()
-    wedgeCandidates(s, dir).count()
-    Seq("graph_adjacency" -> (t1 - t0) / 1e9,
-      "graph_wedge_candidates" -> (System.nanoTime() - t1) / 1e9)
-  }
-
-  /** The r14 decomposition fixpoints (truss + coreness), as their own
-    * timed chain; they consume the base chain's caches (a concurrent
-    * start before the base finishes simply blocks on the cache's
-    * computeIfAbsent, so scheduling order is a packing concern, not a
-    * correctness one).
-    */
-  def warmCachesDecomp(s: SparkSession, dir: String): Seq[(String, Double)] =
-    warmCachesTruss(s, dir) ++ warmCachesCoreness(s, dir)
-
-  def warmCachesTruss(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    trussLabels(s, dir).count()
-    Seq("graph_truss_labels" -> (System.nanoTime() - t0) / 1e9)
-  }
-
-  def warmCachesCoreness(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    corenessLabels(s, dir).count()
-    Seq("graph_coreness_labels" -> (System.nanoTime() - t0) / 1e9)
-  }
+  private[ops] val indexArtifacts: Seq[IndexArtifact] = Seq(
+    IndexArtifact("graph_edges", Nil, (s, dir) => edges(s, dir).count()),
+    IndexArtifact("graph_degrees", Seq("graph_edges"), (s, dir) => degrees(s, dir).count()),
+    IndexArtifact("graph_tri_corners", Seq("graph_degrees"),
+      (s, dir) => triCorners(s, dir).count()),
+    IndexArtifact("graph_tri_edges", Seq("graph_tri_corners"),
+      (s, dir) => triEdgeSupport(s, dir).count()),
+    IndexArtifact("graph_truss_labels", Seq("graph_tri_edges"),
+      (s, dir) => trussLabels(s, dir).count()),
+    IndexArtifact("graph_adjacency", Seq("graph_degrees"),
+      (s, dir) => rankedAdjacency(s, dir).count(), adjCacheGated),
+    IndexArtifact("graph_wedge_candidates", Seq("graph_adjacency"),
+      (s, dir) => wedgeCandidates(s, dir).count(), adjCacheGated),
+    IndexArtifact("graph_coreness_labels", Seq("graph_degrees"),
+      (s, dir) => corenessLabels(s, dir).count()))
 
   /** Probe-facing flight record: (path, delta-rounds-engaged) for one
     * decomposition ("truss" | "coreness" | "components") — the

@@ -81,13 +81,6 @@ object MiningQueries {
   private[ops] def pairSupportsPlan(s: SparkSession, dir: String): DataFrame =
     buildPairSupports(s, dir)
 
-  /** Build + materialize the session support ledger, timed for the bench. */
-  def warmCaches(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    pairSupports(s, dir).count()
-    Seq("assoc_supports" -> (System.nanoTime() - t0) / 1e9)
-  }
-
   /** The (arm, cents, count) histogram of the events value column — the
     * shared scan artifact of the drift dashboard (r12): all three drift
     * statistics (`agg_ks_drift`, `agg_mannwhitney`, `agg_psi_drift`)
@@ -135,15 +128,12 @@ object MiningQueries {
     (for { a <- as; b <- as if a < b } yield (a, b)).toDF("pa", "pb")
   }
 
-  /** Build + materialize the session support ledger + drift histogram,
-    * timed for the bench.
+  /** The mining family's [[IndexPhase]] artifacts: the support ledger,
+    * and the drift histogram with its arm universe.
     */
-  def warmCachesDrift(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    val t0 = System.nanoTime()
-    driftHist(s, dir).count()
-    arms(s, dir)
-    Seq("drift_hist" -> (System.nanoTime() - t0) / 1e9)
-  }
+  private[ops] val indexArtifacts: Seq[IndexArtifact] = Seq(
+    IndexArtifact("assoc_supports", Nil, (s, dir) => pairSupports(s, dir).count()),
+    IndexArtifact("drift_hist", Nil, (s, dir) => { driftHist(s, dir).count(); arms(s, dir) }))
 
   /** Unpersist + drop the cached support ledger + drift histogram for one
     * data dir — ScaleProbe iterates replica dirs through one session, and

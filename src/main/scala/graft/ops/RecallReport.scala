@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * va < 10 (identical scoring, identical (round(cos,6) desc, id asc)
   * tie-break), so [[exactKnnPairs]] runs the k-NN join once and both pair
   * sets fall out — and the result is cached per (session, dir) like every
-  * other index artifact ([[graft.ops.VectorQueries.warmCaches]] builds it
-  * untimed as `recall_pairs`, so the bench's recall_sec times only the
+  * other index artifact ([[graft.ops.IndexPhase]] builds it untimed as
+  * `recall_pairs`, so the bench's recall_sec times only the
   * four ANN search plans, not a re-run of the already-timed exact
   * baselines — the r11 verdict's ask #6).
   *

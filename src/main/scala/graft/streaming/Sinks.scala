@@ -106,15 +106,18 @@ object Sinks {
     * The only drain that can read a [[RedisQueue]]: the reference's list
     * holds bare payloads with no group, so the group must be re-derived
     * from each payload; [[queueStream]] reads [[FileQueue]] segments only.
+    *
+    * Faithful mode, like the reference worker: the response status is
+    * ignored, so the returned count is the POSTs that got any HTTP status.
     */
   def drainQueue(postUrl: String, tableToGroup: Map[String, String],
-      q: DurableQueue, checkStatus: Boolean = false): Int = {
+      q: DurableQueue): Int = {
     val tableRe = """"source":\{"table":"([^"]+)"\}""".r
     var n = 0
     q.drain { (_, payload) =>
       tableRe.findFirstMatchIn(payload).map(_.group(1))
         .flatMap(tableToGroup.get)
-        .foreach { group => if (post(postUrl, group, payload, checkStatus)) n += 1 }
+        .foreach { group => if (post(postUrl, group, payload, checkStatus = false)) n += 1 }
     }
     n
   }
