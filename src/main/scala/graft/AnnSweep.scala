@@ -10,7 +10,7 @@ object AnnSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val combos = args.drop(1).map(_.split(",").map(_.trim.toInt))
-    val spark = Tables.sessionBuilder("local[32]", 32).getOrCreate()
+    val spark = Tables.sessionBuilder(s"local[${Tables.cpus}]", Tables.cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftExtensions.register(spark)
     val padded = if (combos.isEmpty) Array(Array.empty[Int]) else combos

@@ -61,8 +61,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
+    val cpus = Tables.cpus
     // 5 reps, not 3: under a long-lived heap the dedup family's in-suite
     // medians of 3 can drift 2-3× from their standalone times (GC context
     // from neighboring queries) — a phantom "regression" a median of 5

@@ -223,8 +223,7 @@ object CurationPipeline {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
+    val cpus = Tables.cpus
     val spark = Tables.sessionBuilder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.functions.GraftExtensions.register(spark)

@@ -155,8 +155,7 @@ object ScaleProbe {
     // scaladoc — wider shuffle partitioning, shingle-space probes only).
     val factors =
       if (args.length > 2) args.drop(2).toSeq.map(_.toInt) else Seq(10, 30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
+    val cpus = Tables.cpus
     val spark = Tables.sessionBuilder(s"local[$cpus]", cpus)
       // Exponents must price the DISTRIBUTED decomposition loop at every
       // factor - the 1x baseline would otherwise take the in-task gated

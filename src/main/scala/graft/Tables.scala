@@ -56,6 +56,10 @@ object Tables {
     // raise the fallback far past every per-task group count we produce.
     "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536",
     "spark.sql.adaptive.enabled" -> "true",
+    // A stateless micro-batch's incremental plan has no shuffle, so AQE only
+    // re-optimizes the whole plan after its broadcast stage (~0.1 s a batch).
+    // Batch queries and `foreachBatch` Datasets (over a LogicalRDD) keep AQE.
+    "spark.sql.adaptive.streaming.stateless.enabled" -> "false",
     // Generated classes live in ONE JVM-wide LRU keyed by (context
     // classloader, source). Its default 100 entries is below one warm
     // pass of the CDC query mix (~127 classes, `events_rfm` alone ~100),
@@ -81,6 +85,12 @@ object Tables {
     // IO, Hadoop's local file system forks `chmod` per created file and
     // Spark's default manager `readlink` per rename end (see CheckpointFiles).
     streaming.CheckpointFiles.ConfKey -> classOf[streaming.CheckpointFiles].getName)
+
+  /** Cores for a `local[N]` session: `SPARK_GRAFT_CPUS`, else every
+    * available processor.
+    */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** The one way to build a graft session: `local`-style master, shuffle
     * partitions, no UI, and every [[sessionConfigs]] entry applied to the

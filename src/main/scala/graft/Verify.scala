@@ -5,8 +5,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
+    val cpus = Tables.cpus
     // Lenient coercions match the reference's dynamic typing (SURVEY §1.2)
     // and DuckDB-comparable null-on-failure casts.
     val spark = Tables.sessionBuilder(s"local[$cpus]", cpus).getOrCreate()

@@ -9,11 +9,13 @@ import java.util
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsTriggerAvailableNow}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -98,6 +100,21 @@ sealed abstract class Framing(val payload: StructField, val rowColumns: Set[Stri
   /** The record starting at the cursor, null when nothing is left. */
   private[sources] def record(c: Cursor): Array[Byte]
 
+  /** Whether a reader may start mid-segment ([[LogRange.split]]): only
+    * where `pos` is the byte offset itself, so no record count is needed.
+    */
+  def splittable: Boolean = bytePositions
+
+  /** Skip records until one that commits a transaction ends at or past
+    * byte `target`; false when the range ends first. Splittable framings
+    * only.
+    */
+  private[sources] def seekCommit(c: Cursor, target: Long): Boolean =
+    throw new UnsupportedOperationException(s"$this ranges are not split")
+
+  /** Whether `rec` commits a transaction, so a cut may fall right after it. */
+  private[sources] def commits(rec: Array[Byte]): Boolean = false
+
   /** Catalyst value of a record, and its text for pushed filters. */
   def value(rec: Array[Byte]): Any
   def text(v: Any): String
@@ -161,6 +178,7 @@ object Framing {
       Set("pos"), "maxEventsPerBatch", bytePositions = true) {
     private val Magic = Array[Byte](0xfe.toByte, 'b', 'i', 'n')
     private val H = BinlogWire.HeaderLen
+    private val Xid: Byte = 16 // XID_EVENT: the COMMIT of an InnoDB transaction
 
     private def eventSize(h: Array[Byte]): Long =
       (h(9) & 0xffL) | ((h(10) & 0xffL) << 8) | ((h(11) & 0xffL) << 16) | ((h(12) & 0xffL) << 24)
@@ -176,12 +194,21 @@ object Framing {
 
     // Reads the header, skips the payload; a size below a header is
     // corruption, not a partial write — stop offering offsets past it.
-    override private[sources] def skip(c: Cursor): Boolean = {
-      val h = new Array[Byte](H)
+    override private[sources] def skip(c: Cursor): Boolean = skipEvent(c, new Array[Byte](H))
+
+    private def skipEvent(c: Cursor, h: Array[Byte]): Boolean = {
       if (!c.read(h, 0, H)) return false
       val es = eventSize(h)
       es >= H && c.skip(es - H)
     }
+
+    override private[sources] def seekCommit(c: Cursor, target: Long): Boolean = {
+      val h = new Array[Byte](H)
+      while (skipEvent(c, h)) if (h(4) == Xid && c.at >= target) return true
+      false
+    }
+
+    override private[sources] def commits(rec: Array[Byte]): Boolean = rec(4) == Xid
 
     // Offsets proved these bytes existed, but the file can shrink between
     // planning and read: fail naming the file and byte range.
@@ -392,13 +419,14 @@ class LogTable(files: LogFiles) extends Table with SupportsRead {
         override def toBatch: Batch = new Batch {
           override def planInputPartitions(): Array[InputPartition] = {
             val fileOnly = LineFilters.fileOnly(fs)._1
-            files.segments.filterNot(LineFilters.prunesFile(fileOnly, _)).flatMap { f =>
-              val path = files.segmentPath(f)
-              val (start, end) = (framing.dataStart(path), framing.batchEnd(path))
-              if (end <= start) None
-              else Some(LogRange(path, LogOffset(f, framing.pos(0L, start), start),
-                LogOffset(f, framing.pos(Long.MaxValue, end), end), fs): InputPartition)
-            }.toArray
+            LogRange.split(framing,
+              files.segments.filterNot(LineFilters.prunesFile(fileOnly, _)).flatMap { f =>
+                val path = files.segmentPath(f)
+                val (start, end) = (framing.dataStart(path), framing.batchEnd(path))
+                if (end <= start) None
+                else Some(LogRange(path, LogOffset(f, framing.pos(0L, start), start),
+                  LogOffset(f, framing.pos(Long.MaxValue, end), end), fs))
+              })
           }
           override def createReaderFactory(): PartitionReaderFactory =
             LogReaderFactory(framing, files.dir)
@@ -437,10 +465,12 @@ final class Tail(framing: Framing, path: String) {
   }
 }
 
-/** Offsets advance to the newest segment's tail; each batch is one ordered
-  * partition per segment it touches (a binlog is serial per server —
-  * parallelism comes from the downstream shuffle, as in the reference's
-  * single-consumer topology, `k8s/deployment.yaml:8`).
+/** Offsets advance to the newest segment's tail. Each batch reads the
+  * segments it touches as [[LogRange.split]] cuts them: a binlog range
+  * into byte pieces that begin and end at transaction commits, so decode
+  * runs on every core and each partition still reads whole transactions in
+  * log order; a line log one ordered partition per segment, because its
+  * `pos` counts lines from the segment's start.
   */
 class LogStream(files: LogFiles, maxRows: Option[Long] = None,
     positionDir: Option[String] = None, filters: Seq[Filter] = Nil)
@@ -552,14 +582,14 @@ class LogStream(files: LogFiles, maxRows: Option[Long] = None,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val (s, e) = (start.asInstanceOf[LogOffset], end.asInstanceOf[LogOffset])
     if (!s.isBefore(e)) return Array.empty
-    files.segments.filter(f => f >= s.name && f <= e.name)
+    LogRange.split(framing, files.segments.filter(f => f >= s.name && f <= e.name)
       .filterNot(LineFilters.prunesFile(fileOnly, _))
       .flatMap { f =>
         val from = if (f == s.name) s else segmentStart(f)
         val until = if (f == e.name) e else sealedEnd(f)
         if (until.bytePos <= from.bytePos) None
-        else Some(LogRange(files.segmentPath(f), from, until, filters): InputPartition)
-      }.toArray
+        else Some(LogRange(files.segmentPath(f), from, until, filters))
+      })
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -569,9 +599,46 @@ class LogStream(files: LogFiles, maxRows: Option[Long] = None,
   override def stop(): Unit = ()
 }
 
-/** Records of one segment in [from, until); `from.name` is the segment. */
+/** Records of one segment in [from, until); `from.name` is the segment.
+  *
+  * `targets` cut a piece out of the range by the Hadoop split convention.
+  * The reader walks event headers from `from` and starts right after the
+  * first commit that ends at or past `targets._1`, then stops right after
+  * the first commit that ends at or past `targets._2`. A target at or
+  * outside the range's edge means the edge itself. Neighbouring pieces
+  * therefore agree on every boundary with no driver-side walk, a range
+  * with no commit is read whole by its first piece, and a range that ends
+  * mid-transaction is read exactly to `until`.
+  */
 final case class LogRange(path: String, from: LogOffset, until: LogOffset,
-    filters: Seq[Filter] = Nil) extends InputPartition
+    filters: Seq[Filter] = Nil, targets: (Long, Long) = (0L, Long.MaxValue))
+    extends InputPartition
+
+object LogRange {
+  /** The smallest piece: a batch below it stays one task per segment. */
+  val MinPieceBytes: Long = 64L * 1024
+
+  /** Cut one batch's ranges into `ceil(bytes / piece)` pieces each, where
+    * `piece = clamp(batch bytes / defaultParallelism, MinPieceBytes,
+    * spark.sql.files.maxPartitionBytes)`. Only byte targets are computed
+    * here; each reader finds its own commit boundaries. Ranges of a
+    * framing that is not [[Framing.splittable]] pass through whole.
+    */
+  def split(framing: Framing, ranges: Seq[LogRange]): Array[InputPartition] =
+    if (!framing.splittable || ranges.isEmpty) ranges.toArray
+    else {
+      val bytes = ranges.map(r => r.until.bytePos - r.from.bytePos).sum
+      // planned outside any session (a bare LogStream): size by one core
+      val cores = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .map(_.sparkContext.defaultParallelism).getOrElse(1).max(1)
+      val piece = (bytes / cores).max(MinPieceBytes).min(SQLConf.get.filesMaxPartitionBytes).max(1L)
+      ranges.flatMap { r =>
+        val (start, end) = (r.from.bytePos, r.until.bytePos)
+        val n = (end - start + piece - 1) / piece
+        (0L until n).map(i => r.copy(targets = (start + i * piece, start + (i + 1) * piece)))
+      }.toArray
+    }
+}
 
 /** Reads a [[LogRange]] one record at a time. Pushed filters run on the raw
   * record, before it becomes a row (and before any downstream decode).
@@ -581,16 +648,23 @@ final case class LogReaderFactory(framing: Framing, withFile: Boolean)
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val r = partition.asInstanceOf[LogRange]
     val file = UTF8String.fromString(r.from.name)
+    val (lo, hi) = r.targets
     new PartitionReader[InternalRow] {
       private val cursor = new Cursor(r.path, r.from.bytePos, r.until.bytePos)
+      // Whether the cursor sits right after a commit: only there may a
+      // piece end. A piece past the range's first starts at one, or is empty.
+      private var atCommit = lo > r.from.bytePos
+      private var done = atCommit && !framing.seekCommit(cursor, lo)
       private var records = r.from.pos
       private var row: InternalRow = _
       override def next(): Boolean = {
-        while (cursor.at < r.until.bytePos) {
+        while (!done && cursor.at < r.until.bytePos) {
+          if (atCommit && cursor.at >= hi) { done = true; return false }
           val pos = framing.pos(records, cursor.at)
           val rec = framing.record(cursor)
           if (rec == null) return false
           records += 1
+          atCommit = framing.commits(rec)
           val v = framing.value(rec)
           if (r.filters.isEmpty ||
               LineFilters.evalAll(r.filters, framing.text(v), pos, r.from.name)) {

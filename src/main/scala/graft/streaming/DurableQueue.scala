@@ -9,9 +9,10 @@ import scala.jdk.CollectionConverters._
 /** The reference's event queue is a Redis list that survives process death
   * (reference `main.go:36-39,95,392`) — enqueue on delivery, a second worker
   * drains it later, crash in between loses nothing. This is that contract as
-  * a pluggable interface: [[Sinks.queueDeliverBatch]] opens one [[QueueClient]]
-  * per partition task (executor-side — no rows through the driver) and the
-  * drain worker (R15, `main.go:383-419`) consumes via [[DurableQueue.drain]].
+  * a pluggable interface: [[Sinks.dualSink]] and [[Sinks.queueDeliverBatch]]
+  * open one [[QueueClient]] per partition task (executor-side — no rows
+  * through the driver) and the drain worker (R15, `main.go:383-419`)
+  * consumes via [[DurableQueue.drain]].
   *
   * Two impls: [[FileQueue]] (durable segments; point `dir` at shared
   * storage — DFS/NFS — on a real cluster, exactly as one does for

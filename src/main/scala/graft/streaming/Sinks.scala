@@ -12,10 +12,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * by `CdcPipeline.dedupWithinWatermark` when idempotence is wanted.
   *
   * Scale design: the batch is repartitioned by routing group before the
-  * POST loop so one slow group never head-of-line-blocks others (the
+  * delivery loop so one slow group never head-of-line-blocks others (the
   * reference single-threads everything, `main.go:64-114`), and each task
   * reuses one pooled HTTP client per executor instead of a connection per
-  * event.
+  * event. [[dualSink]] runs both paths in that one loop, as the reference
+  * does per event: one shuffle and one delivery stage per micro-batch,
+  * nothing cached.
   */
 object Sinks {
 
@@ -32,24 +34,15 @@ object Sinks {
     else !checkStatus || (status >= 200 && status < 300)
   }
 
-  /** The one HTTP POST loop: partition the batch by group and POST each row
-    * on the executor. With a `dlq`, each partition task writes the rows whose
-    * POST failed to its own client of that queue.
+  /** The one delivery loop: partition the batch by group and hand each
+    * partition task its `(group, payload)` rows, on the executor.
     */
-  private def postByGroup(batch: DataFrame, postUrl: String, checkStatus: Boolean,
-      dlq: Option[DurableQueue]): Unit = {
+  private def byGroup(batch: DataFrame)(deliver: Iterator[(String, String)] => Unit): Unit = {
     val n = math.max(1, batch.sparkSession.sparkContext.defaultParallelism)
     batch.select(col("group"), col("payload"))
       .repartition(n, col("group"))
       .foreachPartition { rows: Iterator[Row] =>
-        def postAll(failed: (String, String) => Unit): Unit = rows.foreach { r =>
-          val (group, payload) = (r.getString(0), r.getString(1))
-          if (!post(postUrl, group, payload, checkStatus)) failed(group, payload)
-        }
-        dlq match {
-          case Some(q) => withClient(q)(c => postAll(c.enqueue))
-          case None => postAll((_, _) => ())
-        }
+        deliver(rows.map(r => (r.getString(0), r.getString(1))))
       }
   }
 
@@ -68,7 +61,7 @@ object Sinks {
 
   /** HTTP delivery for one micro-batch: partition by group, POST per row. */
   def httpDeliverBatch(batch: DataFrame, postUrl: String, checkStatus: Boolean): Unit =
-    postByGroup(batch, postUrl, checkStatus, dlq = None)
+    byGroup(batch)(_.foreach { case (g, p) => post(postUrl, g, p, checkStatus) })
 
   /** Sink A analog (`main.go:95`): enqueue payloads to the caller's queue —
     * the stand-in for the reference's Redis list (`cdc_events`,
@@ -94,7 +87,9 @@ object Sinks {
     * redrives it like the queue leg.
     */
   def httpDeliverBatchDlq(batch: DataFrame, postUrl: String, dlq: DurableQueue): Unit =
-    postByGroup(batch, postUrl, checkStatus = true, Some(dlq))
+    byGroup(batch)(rows => withClient(dlq)(c => rows.foreach { case (g, p) =>
+      if (!post(postUrl, g, p, checkStatus = true)) c.enqueue(g, p)
+    }))
 
   /** The queue-drain second pipeline (R15, reference `main.go:383-419`):
     * pop everything currently queued and POST each payload again —
@@ -147,6 +142,13 @@ object Sinks {
     * `foreachBatch` writing to both sinks — at-least-once ×2 like the
     * reference, minus its crash-replay window. The HTTP leg is faithful
     * mode: the response status is ignored (H4).
+    *
+    * Each micro-batch is delivered in one pass with no cache: partition by
+    * group, and in each task enqueue each row to its own client of `q` and
+    * then POST it, the reference's per-event order (`main.go:95`, then
+    * `main.go:107`).
+    * The task's queue segment is published when the task ends, so a
+    * failed task re-sends its POSTs but never half a segment.
     */
   def dualSink(
       envelopes: DataFrame,
@@ -158,11 +160,10 @@ object Sinks {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val cached = batch.persist()
-        try {
-          httpDeliverBatch(cached, postUrl, checkStatus = false)
-          queueDeliverBatch(cached, q)
-        } finally { cached.unpersist(); () }
+        byGroup(batch)(rows => withClient(q)(c => rows.foreach { case (g, p) =>
+          c.enqueue(g, p)
+          post(postUrl, g, p, checkStatus = false)
+        }))
       }
 
   def runToCompletion(w: DataStreamWriter[Row]): StreamingQuery = {

@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.functions.{col, hash, sum}
+
 /** ISOLATED index-build decomposition: runs the bench's index phase
   * ([[graft.ops.IndexPhase]]) with one worker, strictly sequentially, so
   * each artifact's wall is its own task work free of co-scheduling
@@ -18,13 +20,18 @@ package graft.tools
 object IndexProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString).toInt
+    val cpus = graft.Tables.cpus
     val spark = graft.Tables.sessionBuilder(s"local[$cpus]", cpus)
       .appName("index-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftExtensions.register(spark)
-    spark.range(1000000).selectExpr("sum(id)").collect()
+    // Untimed warm-up over the corpus itself: one read and aggregate of
+    // every table, so the first artifact does not pay the session's first
+    // parquet scans, codegen and JIT alone.
+    graft.Tables.all.foreach { t =>
+      val df = graft.Tables.load(spark, dir, t)
+      df.select(sum(hash(df.columns.map(col).toIndexedSeq: _*))).collect()
+    }
 
     val t0 = System.nanoTime()
     val items = graft.ops.IndexPhase.run(spark, dir, width = 1)

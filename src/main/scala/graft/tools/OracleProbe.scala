@@ -23,7 +23,8 @@ package graft.tools
   */
 object OracleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = graft.Tables.sessionBuilder("local[32]", 32)
+    val cpus = graft.Tables.cpus
+    val spark = graft.Tables.sessionBuilder(s"local[$cpus]", cpus)
       .appName("oracle-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftExtensions.register(spark)

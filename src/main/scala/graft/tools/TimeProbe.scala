@@ -17,7 +17,7 @@ package graft.tools
   */
 object TimeProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.Tables.cpus
     val spark = graft.Tables.sessionBuilder(s"local[$cpus]", cpus)
       .appName("time-probe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -4,8 +4,8 @@ import org.apache.spark.sql.catalyst.InternalRow
 
 /** Drains one [[LogRange]] through the source's own partition reader. */
 object ReadRange {
-  def rows(framing: Framing, range: LogRange): Vector[InternalRow] = {
-    val r = LogReaderFactory(framing, withFile = false).createReader(range)
+  def rows(framing: Framing, range: LogRange, withFile: Boolean = false): Vector[InternalRow] = {
+    val r = LogReaderFactory(framing, withFile).createReader(range)
     try {
       val out = Vector.newBuilder[InternalRow]
       while (r.next()) out += r.get().copy()
