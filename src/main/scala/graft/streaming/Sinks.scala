@@ -14,10 +14,13 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   * Scale design: the batch is repartitioned by routing group before the
   * delivery loop so one slow group never head-of-line-blocks others (the
   * reference single-threads everything, `main.go:64-114`), and each task
-  * reuses one pooled HTTP client per executor instead of a connection per
-  * event. [[dualSink]] runs both paths in that one loop, as the reference
-  * does per event: one shuffle and one delivery stage per micro-batch,
-  * nothing cached.
+  * POSTs its rows in order on its thread's pooled keep-alive connection,
+  * pipelined: up to a window of requests is in flight, and each response
+  * is matched to its row in order ([[FastHttp.pipelined]]). The reference
+  * instead waits a full round trip per event on each path (`main.go:105-113`,
+  * `main.go:409-417`). [[dualSink]] runs both paths in that one loop, as the
+  * reference does per event: one shuffle and one delivery stage per
+  * micro-batch, nothing cached.
   */
 object Sinks {
 
@@ -28,11 +31,18 @@ object Sinks {
     * retry/dead-letter. Transport failure → false, log-and-continue
     * (`main.go:108-111`).
     */
-  def post(postUrl: String, group: String, payload: String, checkStatus: Boolean): Boolean = {
-    val status = FastHttp.post(s"$postUrl/$group", payload)
-    if (status < 0) false
-    else !checkStatus || (status >= 200 && status < 300)
-  }
+  def post(postUrl: String, group: String, payload: String, checkStatus: Boolean): Boolean =
+    delivered(FastHttp.post(s"$postUrl/$group", payload), checkStatus)
+
+  private def delivered(status: Int, checkStatus: Boolean): Boolean =
+    status >= 0 && (!checkStatus || (status >= 200 && status < 300))
+
+  /** POST each `(group, payload)` row to `postUrl/group`, pipelined on this
+    * task's connection; `onStatus` gets each row with its status, in order.
+    */
+  private def postRows(postUrl: String, rows: Iterator[(String, String)])(
+      onStatus: ((String, String), Int) => Unit): Unit =
+    FastHttp.pipelined(onStatus)(send => rows.foreach(r => send(s"$postUrl/${r._1}", r._2, r)))
 
   /** The one delivery loop: partition the batch by group and hand each
     * partition task its `(group, payload)` rows, on the executor.
@@ -59,9 +69,12 @@ object Sinks {
     } catch { case e: Throwable => c.abort(); throw e }
   }
 
-  /** HTTP delivery for one micro-batch: partition by group, POST per row. */
+  /** HTTP delivery for one micro-batch: partition by group, POST per row.
+    * Nothing acts on a status here, so `checkStatus` changes nothing; fixed
+    * mode that acts on it is [[httpDeliverBatchDlq]].
+    */
   def httpDeliverBatch(batch: DataFrame, postUrl: String, checkStatus: Boolean): Unit =
-    byGroup(batch)(_.foreach { case (g, p) => post(postUrl, g, p, checkStatus) })
+    byGroup(batch)(rows => postRows(postUrl, rows)((_, _) => ()))
 
   /** Sink A analog (`main.go:95`): enqueue payloads to the caller's queue —
     * the stand-in for the reference's Redis list (`cdc_events`,
@@ -87,8 +100,8 @@ object Sinks {
     * redrives it like the queue leg.
     */
   def httpDeliverBatchDlq(batch: DataFrame, postUrl: String, dlq: DurableQueue): Unit =
-    byGroup(batch)(rows => withClient(dlq)(c => rows.foreach { case (g, p) =>
-      if (!post(postUrl, g, p, checkStatus = true)) c.enqueue(g, p)
+    byGroup(batch)(rows => withClient(dlq)(c => postRows(postUrl, rows) { case ((g, p), status) =>
+      if (!delivered(status, checkStatus = true)) c.enqueue(g, p)
     }))
 
   /** The queue-drain second pipeline (R15, reference `main.go:383-419`):
@@ -104,15 +117,19 @@ object Sinks {
     *
     * Faithful mode, like the reference worker: the response status is
     * ignored, so the returned count is the POSTs that got any HTTP status.
+    * The POSTs are pipelined, so a [[FileQueue]] may delete a segment while
+    * up to one window of its POSTs is still unanswered.
     */
   def drainQueue(postUrl: String, tableToGroup: Map[String, String],
       q: DurableQueue): Int = {
     val tableRe = """"source":\{"table":"([^"]+)"\}""".r
     var n = 0
-    q.drain { (_, payload) =>
-      tableRe.findFirstMatchIn(payload).map(_.group(1))
-        .flatMap(tableToGroup.get)
-        .foreach { group => if (post(postUrl, group, payload, checkStatus = false)) n += 1 }
+    FastHttp.pipelined[Unit]((_, status) => if (delivered(status, checkStatus = false)) n += 1) { send =>
+      q.drain { (_, payload) =>
+        tableRe.findFirstMatchIn(payload).map(_.group(1))
+          .flatMap(tableToGroup.get)
+          .foreach(group => send(s"$postUrl/$group", payload, ()))
+      }
     }
     n
   }
@@ -146,7 +163,9 @@ object Sinks {
     * Each micro-batch is delivered in one pass with no cache: partition by
     * group, and in each task enqueue each row to its own client of `q` and
     * then POST it, the reference's per-event order (`main.go:95`, then
-    * `main.go:107`).
+    * `main.go:107`). The POSTs are pipelined: a row is enqueued before its
+    * request is written, and the task reads every response before it
+    * publishes its segment.
     * The task's queue segment is published when the task ends, so a
     * failed task re-sends its POSTs but never half a segment.
     */
@@ -160,10 +179,8 @@ object Sinks {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        byGroup(batch)(rows => withClient(q)(c => rows.foreach { case (g, p) =>
-          c.enqueue(g, p)
-          post(postUrl, g, p, checkStatus = false)
-        }))
+        byGroup(batch)(rows => withClient(q)(c =>
+          postRows(postUrl, rows.map { r => c.enqueue(r._1, r._2); r })((_, _) => ())))
       }
 
   def runToCompletion(w: DataStreamWriter[Row]): StreamingQuery = {
