@@ -1,109 +1,178 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumnBridge.toColumn
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, Literal, NullsFirst, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.Sort
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Distributed TOTAL-ORDER rank — the scale-correct replacement for
+/** Distributed TOTAL-ORDER ranks — the scale-correct replacement for
   * `row_number()/ntile(n)` over a partition-less Window (which Spark
   * executes as ONE task holding the whole input: a single-partition sort,
   * not a distributed sort — the r12 judge's `events_rfm` finding).
   *
-  * Shape: the classic sorted-zipWithIndex, kept in the DataFrame API so
-  * Catalyst owns every exchange:
+  * [[globalRanks]] ranks every requested order in ONE stacked pass:
   *
-  *   1. `repartitionByRange` + `sortWithinPartitions` on the total order —
-  *      a genuinely distributed sort (range exchange, per-partition sort,
-  *      no single reducer);
-  *   2. stamp `spark_partition_id()` and `localCheckpoint` once (both
-  *      consumers below read the materialized sort instead of re-running
-  *      the exchange);
-  *   3. per-partition row counts → each partition's global OFFSET via a
-  *      triangular self-join over the ≤ numPartitions count rows (tiny by
-  *      construction; deliberately NOT a partition-less window, so plans
-  *      built on this helper can pin "no empty-partition-spec Window"
-  *      wholesale);
-  *   4. global rank = local `row_number` (Window partitioned by the
-  *      partition id — each frame is exactly one range partition) + the
-  *      broadcast offset.
+  *   1. stack: one row per (input row, order index `__o`); order i's sort
+  *      columns become `when(__o === i, key)` with the caller's direction
+  *      and null ordering, so one Window spec serves every order (a
+  *      window partition only ever holds one order's rows);
+  *   2. bounds: one seeded reservoir sample of the sort keys, sized like
+  *      `RangePartitioner`'s (about 20 rows per output partition,
+  *      oversampled 3× across input partitions, weighted by each input
+  *      partition's row count), ordered on the driver by Spark's own
+  *      `InterpretedOrdering` under each order's SortOrders, gives
+  *      `nParts − 1` bound tuples per order. They enter the plan as
+  *      LITERALS: `__b` = the number of bounds strictly before the row in
+  *      its order;
+  *   3. offsets: rows per `(__o, __b)` are counted once and collected
+  *      (≤ orders × nParts rows); a bucket's offset is the count of the
+  *      lower buckets of its order, again a literal;
+  *   4. rank = `row_number()` over `partitionBy(__o, __b)` in the order's
+  *      keys + the bucket offset, pivoted back to one row per input row.
   *
-  * Determinism: callers pass a TOTAL order (tie-broken by a unique key),
-  * so the rank — and anything derived from it, e.g. [[ntileFromRank]] —
-  * is engine-reproducible. At 100 TB the cost is one range shuffle + one
-  * hash shuffle on the partition id, both over the caller's (already
-  * reduced) table; per-task state is one partition, never the world.
+  * Nothing is shared between consumers through an exchange: the bucket
+  * column is a deterministic function of the row and literal bounds, so
+  * the counts and the rank read the same buckets whether or not Spark
+  * reuses an exchange, re-plans adaptively, or retries a task — unlike a
+  * `repartitionByRange` whose `RangePartitioner` draws its bounds with an
+  * RNG seeded by RDD id in every copy of the exchange.
+  *
+  * Determinism: callers pass TOTAL orders (tie-broken by a unique key),
+  * so each rank — and anything derived from it, e.g. [[ntileFromRank]] —
+  * is engine-reproducible. Per-task state is one bucket of one order,
+  * never the world; the driver holds the sample and the bucket counts.
   */
 object DistributedRank {
 
-  /** Adds `rankCol` (1-based Long global rank) under the total order
-    * `sort`. Input must not contain columns named `__pid`/`__c`/`__off`.
+  /** Adds one 1-based Long rank column per `(name, sort columns)` order
+    * to `df`. Each order must be total over `df`, so input rows are
+    * distinct and the output has one row per input row. `df` is read
+    * three times (sample, counts, rank) and must be deterministic — a
+    * checkpointed table, in practice. It must not contain columns named
+    * `__o`, `__b` or `__r`.
     */
-  def globalRank(df: DataFrame, rankCol: String, sort: Column*): DataFrame =
-    globalRankImpl(df, rankCol, checkpoint = true, sort: _*)
+  def globalRanks(df: DataFrame, orders: (String, Seq[Column])*): DataFrame = {
+    val nParts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    // the analyzer resolves each sort column to (key, direction, nulls)
+    val resolved = df.sort(orders.flatMap(_._2): _*).queryExecution.analyzed match {
+      case s: Sort => s.order
+      case p => throw new IllegalStateException(s"unexpected sort plan:\n$p")
+    }
+    val first = orders.scanLeft(0)(_ + _._2.size) // order i's keys start at first(i)
+    val sorts = orders.indices.map(i => resolved.slice(first(i), first(i + 1)))
+    val keys = df.select(sorts.flatten.zipWithIndex.map { case (s, j) =>
+      toColumn(s.child).as(s"__k$j") }: _*)
+    val types = keys.schema.map(_.dataType)
 
-  /** [[globalRank]] WITHOUT the internal localCheckpoint (r19): for a
-    * caller whose input is already materialized (a checkpoint or session
-    * artifact) and who does NOT chain ranks, the checkpoint is a pure
-    * eager-materialization tax — the range exchange below the sort is
-    * reused between the offset-count consumer and the main join, several
-    * independent rank branches schedule CONCURRENTLY inside one query
-    * DAG (eager checkpoints would serialize them), and the sampling pass
-    * above the materialized input re-runs only the narrow per-partition
-    * sort. Chained callers keep [[globalRank]]: without the checkpoint
-    * every later rank re-derives the whole earlier subtree (measured
-    * 1.98 → 4.4 s on the 3-rank events_rfm chain).
-    *
-    * PRECONDITION (r20, advice): correctness of the lazy variant leans on
-    * Spark's exchange/stage reuse — the offset-count consumer and the
-    * rank join each embed their own copy of the range exchange, and the
-    * RangePartitioner samples with an RDD-id-seeded RNG, so if the two
-    * copies executed INDEPENDENTLY they could draw different range bounds
-    * and the offsets would silently misalign (wrong ranks, no error).
-    * With `spark.sql.exchange.reuse` on (the default) the canonically-
-    * equal exchanges materialize once and both consumers read the same
-    * bounds; [[globalRankImpl]] asserts the conf rather than trusting it.
+    val sample = sketch(keys, nParts)
+    val o = col("__o")
+    val bucket = orders.indices.map { i =>
+      val key = (j: Int) => toColumn(sorts(i)(j).child)
+      val ordering = new InterpretedOrdering(sorts(i).zipWithIndex.map { case (s, j) =>
+        SortOrder(BoundReference(first(i) + j, types(first(i) + j), nullable = true),
+          s.direction, s.nullOrdering, Seq.empty) })
+      val bounds = rangeBounds(sample, nParts, ordering)
+      // bound < row, lexicographically over the order's keys
+      val before = bounds.map(b => sorts(i).indices.foldRight(lit(false)) { (j, rest) =>
+        val t = types(first(i) + j)
+        val v = b.get(first(i) + j, t)
+        val vl = toColumn(Literal(v, t))
+        precedes(v, vl, key(j), sorts(i)(j)) || (key(j) <=> vl && rest)
+      })
+      i -> before.foldLeft(lit(0))((n, p) => n + when(p, 1).otherwise(0))
+    }.foldLeft(lit(0)) { case (b, (i, n)) => when(o === i, n).otherwise(b) }
+    val stacked = df
+      .withColumn("__o", explode(array(orders.indices.map(lit): _*)))
+      .withColumn("__b", bucket)
+
+    val counts = stacked.groupBy("__o", "__b").count().collect()
+      .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+    val offsets = for (i <- orders.indices; b <- 0 until nParts)
+      yield (0 until b).map(l => counts.getOrElse((i, l), 0L)).sum
+    val window = Window.partitionBy("__o", "__b").orderBy(sorts.zipWithIndex.flatMap { case (ss, i) =>
+      ss.map(s => ordered(when(o === i, toColumn(s.child)), s))
+    }: _*)
+    val ranked = stacked.withColumn("__r", row_number().over(window).cast("long") +
+      element_at(typedLit(offsets.toArray), o * nParts + col("__b") + 1))
+
+    val inCols = df.columns.toSeq.map(df.col)
+    if (orders.size == 1) ranked.select(inCols :+ col("__r").as(orders.head._1): _*)
+    else {
+      val rankCols = orders.zipWithIndex.map { case ((name, _), i) =>
+        max(when(o === i, col("__r"))).as(name) }
+      ranked.groupBy(inCols: _*).agg(rankCols.head, rankCols.tail: _*)
+    }
+  }
+
+  /** `c` sorted in `s`'s direction and null ordering. */
+  private def ordered(c: Column, s: SortOrder): Column =
+    (s.direction == Ascending, s.nullOrdering == NullsFirst) match {
+      case (true, true) => c.asc_nulls_first
+      case (true, false) => c.asc_nulls_last
+      case (false, true) => c.desc_nulls_first
+      case (false, false) => c.desc_nulls_last
+    }
+
+  /** Whether the bound value `v` (literal `vl`) comes strictly before
+    * `key` under `s`'s direction and null ordering. Never null.
     */
-  def globalRankLazy(df: DataFrame, rankCol: String, sort: Column*): DataFrame =
-    globalRankImpl(df, rankCol, checkpoint = false, sort: _*)
+  private def precedes(v: Any, vl: Column, key: Column, s: SortOrder): Column = {
+    val nullsFirst = s.nullOrdering == NullsFirst
+    if (v == null) if (nullsFirst) key.isNotNull else lit(false)
+    else {
+      val cmp = if (s.direction == Ascending) vl < key else vl > key
+      if (nullsFirst) key.isNotNull && cmp else key.isNull || cmp
+    }
+  }
 
-  private def globalRankImpl(
-      df: DataFrame, rankCol: String, checkpoint: Boolean, sort: Column*): DataFrame = {
-    // the lazy path's two consumers must read ONE materialized range
-    // exchange (see globalRankLazy's precondition note)
-    if (!checkpoint)
-      require(
-        df.sparkSession.conf.get("spark.sql.exchange.reuse", "true").toBoolean,
-        "globalRankLazy requires spark.sql.exchange.reuse=true: its two " +
-          "consumers must share one sampled range exchange or ranks misalign")
-    val nParts =
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // The checkpoint is load-bearing: chained globalRank calls nest, so
-    // without it every later rank re-derives the whole earlier subtree
-    // (measured 1.98 → 4.4 s on the 3-rank events_rfm when removed) —
-    // and the counts consumer reads the materialized sort instead of
-    // re-running the exchange.
-    val sortedPlan = df
-      .repartitionByRange(nParts, sort: _*)
-      .sortWithinPartitions(sort: _*)
-      .withColumn("__pid", spark_partition_id())
-    val sorted = if (checkpoint) sortedPlan.localCheckpoint() else sortedPlan
-    // counts reads the materialized sort and feeds exactly one consumer
-    // (offs) — no checkpoint; one extra ≤nParts-row aggregate job is
-    // cheaper than materializing it.
-    val counts = sorted.groupBy("__pid").agg(count(lit(1)).as("__c"))
-    // Offset of partition p = Σ counts of partitions < p. A triangular
-    // left self-join over ≤ nParts rows — O(nParts²) on metadata-sized
-    // input, and windowless on purpose (see scaladoc).
-    val prior = counts.select(col("__pid").as("__p2"), col("__c").as("__c2"))
-    val offs = counts
-      .join(prior, col("__p2") < col("__pid"), "left")
-      .groupBy("__pid")
-      .agg(coalesce(sum(col("__c2")), lit(0L)).as("__off"))
-    val wLocal = Window.partitionBy("__pid").orderBy(sort: _*)
-    sorted
-      .join(broadcast(offs), "__pid")
-      .withColumn(rankCol, row_number().over(wLocal).cast("long") + col("__off"))
-      .drop("__pid", "__off")
+  /** A seeded reservoir sample of `keys`' rows with each row's weight —
+    * its input partition's rows per sampled row — in one job with no
+    * shuffle. `RangePartitioner.sketch`'s sizing: 20 rows per output
+    * partition, 3× oversampled across the input partitions.
+    */
+  private def sketch(keys: DataFrame, nParts: Int): Seq[(InternalRow, Double)] = {
+    val rdd = keys.queryExecution.toRdd
+    val perPart = math.ceil(3.0 * math.min(20.0 * nParts, 1e6) / rdd.getNumPartitions.max(1)).toInt
+    rdd.mapPartitionsWithIndex { (p, rows) =>
+      val rng = new scala.util.Random(0x5eed + p)
+      val kept = new Array[InternalRow](perPart)
+      var n = 0L
+      rows.foreach { r =>
+        if (n < perPart) kept(n.toInt) = r.copy()
+        else {
+          val j = (rng.nextDouble() * (n + 1)).toLong
+          if (j < perPart) kept(j.toInt) = r.copy()
+        }
+        n += 1
+      }
+      val m = math.min(n, perPart.toLong).toInt
+      val weight = n.toDouble / m
+      kept.iterator.take(m).map(r => (r, weight))
+    }.collect().toSeq
+  }
+
+  /** Up to `nParts − 1` distinct bound rows that cut the weighted sample
+    * into equal-weight runs under `ordering` (`RangePartitioner`'s
+    * `determineBounds`).
+    */
+  private def rangeBounds(sample: Seq[(InternalRow, Double)], nParts: Int,
+      ordering: InterpretedOrdering): Seq[InternalRow] = {
+    val sorted = sample.sortBy(_._1)(ordering)
+    val step = sorted.map(_._2).sum / nParts
+    val bounds = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+    var cum = 0.0
+    var target = step
+    for ((row, w) <- sorted if bounds.size < nParts - 1) {
+      cum += w
+      if (cum >= target && (bounds.isEmpty || ordering.gt(row, bounds.last))) {
+        bounds += row
+        target += step
+      }
+    }
+    bounds.toSeq
   }
 
   /** `ntile(buckets)` reconstructed from a global 1-based rank and the

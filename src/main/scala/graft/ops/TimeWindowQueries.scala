@@ -944,26 +944,15 @@ object TimeWindowQueries {
     // quintile on every axis (most recent / most frequent / highest
     // spend). Exactness: quintiles over a TOTAL order (metric, then
     // user_id) are deterministic and engine-identical, where
-    // threshold-based bucketing would be tie-sensitive. Scale shape
-    // (r13 — the judge's r12 finding): everything after the first
-    // aggregate lives on the USER dimension (corpus ÷ events per user),
-    // and each quintile is now DistributedRank.globalRank (range sort +
-    // partition-offset) + the exact NTILE formula — three distributed
-    // range sorts instead of three global single-partition ntile
-    // windows. Output hash-identical to the r12 ntile (PlanSpec pins no
-    // partition-less Window survives in the plan). Money sums ride
-    // DECIMAL(38,0) per the house overflow rule.
-    // r19 restructure of the rank passes: the r13 shape CHAINED the three
-    // globalRank calls, so each call's internal eager localCheckpoint
-    // serialized a range sort of the increasingly wide (metrics + prior
-    // ranks) row — three materialization barriers back to back. The three
-    // ranks are independent columns of the same user table: materialize
-    // the per-user table ONCE, run three NARROW (user_id, metric) lazy
-    // rank branches that Spark schedules concurrently inside the one
-    // query DAG (each branch's range exchange is reused between its
-    // offset counts and its rank join), and join the three rank columns
-    // back on user_id. Hash-identical output: identical total orders,
-    // identical NTILE arithmetic.
+    // threshold-based bucketing would be tie-sensitive. Scale shape:
+    // everything after the first aggregate lives on the USER dimension
+    // (corpus ÷ events per user), materialized once; the three quintile
+    // ranks are ONE DistributedRank.globalRanks pass (three orders stacked
+    // over literal range bounds, never a partition-less window) that
+    // carries `money` and `nu` through, so no join back to the user table
+    // follows; then the exact NTILE formula. The ≤125-row cube is sorted
+    // in one partition rather than range-partitioned (a sampling job for
+    // 125 rows). Money sums ride DECIMAL(38,0) per the house overflow rule.
     "events_rfm" -> { (s, dir) =>
       val d38 = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
       val per = Tables.events(s, dir)
@@ -974,31 +963,24 @@ object TimeWindowQueries {
           sum(col("c").cast(d38)).cast("long").as("money"))
       val sc = per.crossJoin(broadcast(per.agg(
           max(col("last_day")).as("maxd"), count(lit(1)).as("nu"))))
-        .withColumn("rec", datediff(col("maxd"), col("last_day")).cast("long"))
+        .select(col("user_id"), col("freq"), col("money"), col("nu"),
+          datediff(col("maxd"), col("last_day")).cast("long").as("rec"))
         .localCheckpoint()
-      val r1 = DistributedRank.globalRankLazy(
-        sc.select(col("user_id").as("u_r"), col("rec")), "r_rnk",
-        col("rec"), col("u_r")).select(col("u_r"), col("r_rnk"))
-      val r2 = DistributedRank.globalRankLazy(
-        sc.select(col("user_id").as("u_f"), col("freq")), "f_rnk",
-        col("freq").desc, col("u_f")).select(col("u_f"), col("f_rnk"))
-      val r3 = DistributedRank.globalRankLazy(
-        sc.select(col("user_id").as("u_m"), col("money")), "m_rnk",
-        col("money").desc, col("u_m")).select(col("u_m"), col("m_rnk"))
-      val nt = sc
-        .join(r1, col("user_id") === col("u_r"))
-        .join(r2, col("user_id") === col("u_f"))
-        .join(r3, col("user_id") === col("u_m"))
+      DistributedRank.globalRanks(sc,
+          "r_rnk" -> Seq(col("rec"), col("user_id")),
+          "f_rnk" -> Seq(col("freq").desc, col("user_id")),
+          "m_rnk" -> Seq(col("money").desc, col("user_id")))
         .withColumn("r_score",
           DistributedRank.ntileFromRank(col("r_rnk"), col("nu"), 5))
         .withColumn("f_score",
           DistributedRank.ntileFromRank(col("f_rnk"), col("nu"), 5))
         .withColumn("m_score",
           DistributedRank.ntileFromRank(col("m_rnk"), col("nu"), 5))
-      nt.groupBy("r_score", "f_score", "m_score")
+        .groupBy("r_score", "f_score", "m_score")
         .agg(count(lit(1)).as("n_users"),
           sum(col("money").cast(d38)).cast("long").as("money_cents"))
-        .orderBy("r_score", "f_score", "m_score")
+        .coalesce(1)
+        .sortWithinPartitions("r_score", "f_score", "m_score")
     },
 
     // GROWTH ACCOUNTING (r16): the weekly new / retained / resurrected /
@@ -1043,11 +1025,11 @@ object TimeWindowQueries {
     // PARETO / LORENZ CONCENTRATION (r16): revenue share by spend decile
     // — the "what share do the top 10% carry" readout next to agg_gini's
     // scalar. Users rank by exact integer cents through
-    // [[DistributedRank.globalRank]] (range-partitioned distributed sort,
-    // never a partition-less window), deciles via the ntile-identical
+    // [[DistributedRank.globalRanks]] (distributed sort over literal range
+    // bounds, never a partition-less window), deciles via the ntile-identical
     // rank arithmetic, then the cumulative share is a triangular
     // self-join over the TEN-row decile table (windowless on metadata-
-    // sized input, the DistributedRank offset pattern). Shares in exact
+    // sized input). Shares in exact
     // ppm through DECIMAL(38,0) truncating division.
     "events_pareto" -> { (s, dir) =>
       val d38 = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
@@ -1060,16 +1042,13 @@ object TimeWindowQueries {
         .groupBy("user_id")
         .agg(coalesce(sum(col("c").cast(d38)), lit(0).cast(d38))
           .cast("long").as("cents"))
-      // r19: materialize the user table once and rank LAZILY (same
-      // contract as events_rfm) — the eager checkpoint inside
-      // globalRank serialized an extra materialization per rep; with a
-      // checkpointed input the rank's range exchange is reused between
-      // its offset counts and the rank join.
+      // the user table is materialized once: globalRanks reads it three
+      // times (sample, bucket counts, rank)
       val sc = per.crossJoin(broadcast(per.agg(
         count(lit(1)).as("nu"), sum(col("cents").cast(d38)).as("tot"))))
         .localCheckpoint()
-      val r = DistributedRank.globalRankLazy(sc, "rnk",
-        col("cents").desc, col("user_id"))
+      val r = DistributedRank.globalRanks(sc,
+        "rnk" -> Seq(col("cents").desc, col("user_id")))
       val byDec = r
         .withColumn("decile",
           DistributedRank.ntileFromRank(col("rnk"), col("nu"), 10))

@@ -618,24 +618,37 @@ object LogRange {
   /** The smallest piece: a batch below it stays one task per segment. */
   val MinPieceBytes: Long = 64L * 1024
 
-  /** Cut one batch's ranges into `ceil(bytes / piece)` pieces each, where
-    * `piece = clamp(batch bytes / defaultParallelism, MinPieceBytes,
-    * spark.sql.files.maxPartitionBytes)`. Only byte targets are computed
-    * here; each reader finds its own commit boundaries. Ranges of a
-    * framing that is not [[Framing.splittable]] pass through whole.
+  /** Cut one batch's ranges into one wave of pieces: `ceil(batch bytes /
+    * piece)` pieces in all, where `piece = clamp(batch bytes /
+    * defaultParallelism, MinPieceBytes, spark.sql.files.maxPartitionBytes)`,
+    * so `defaultParallelism` pieces unless a clamp binds. Ranges get their
+    * share by largest remainder, at least one each and never a piece above
+    * `maxPartitionBytes`; a range's pieces are equal. Only byte targets
+    * are computed here; each reader finds its own commit boundaries.
+    * Ranges of a framing that is not [[Framing.splittable]] pass through
+    * whole.
     */
   def split(framing: Framing, ranges: Seq[LogRange]): Array[InputPartition] =
     if (!framing.splittable || ranges.isEmpty) ranges.toArray
     else {
-      val bytes = ranges.map(r => r.until.bytePos - r.from.bytePos).sum
+      def ceilDiv(a: Long, b: Long) = (a + b - 1) / b
+      val lens = ranges.map(r => r.until.bytePos - r.from.bytePos)
+      val bytes = lens.sum.max(1L)
       // planned outside any session (a bare LogStream): size by one core
       val cores = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
         .map(_.sparkContext.defaultParallelism).getOrElse(1).max(1)
-      val piece = (bytes / cores).max(MinPieceBytes).min(SQLConf.get.filesMaxPartitionBytes).max(1L)
-      ranges.flatMap { r =>
-        val (start, end) = (r.from.bytePos, r.until.bytePos)
-        val n = (end - start + piece - 1) / piece
-        (0L until n).map(i => r.copy(targets = (start + i * piece, start + (i + 1) * piece)))
+      val maxBytes = SQLConf.get.filesMaxPartitionBytes
+      val piece = ceilDiv(bytes, cores).max(MinPieceBytes).min(maxBytes)
+      val total = ceilDiv(bytes, piece)
+      val quota = lens.map(_.toDouble * total / bytes)
+      val base = quota.map(_.toLong)
+      val extra = ranges.indices.sortBy(i => base(i) - quota(i)).take((total - base.sum).toInt).toSet
+      ranges.indices.flatMap { i =>
+        val r = ranges(i)
+        val n = (base(i) + (if (extra(i)) 1 else 0)).max(1L).max(ceilDiv(lens(i), maxBytes))
+        val size = ceilDiv(lens(i), n).max(1L)
+        val start = r.from.bytePos
+        (0L until n).map(k => r.copy(targets = (start + k * size, start + (k + 1) * size)))
       }.toArray
     }
 }

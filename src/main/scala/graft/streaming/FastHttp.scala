@@ -103,6 +103,9 @@ object FastHttp {
     private val pool = conns.get()
     private val pending = new java.util.ArrayDeque[Req]()
     private var pendingBytes = 0L
+    // the last URL sent, parsed: it changes only with the group
+    private var lastUrl: String = _
+    private var path: String = _
     private var key: String = _
     private var host: String = _
     private var port = 0
@@ -112,16 +115,19 @@ object FastHttp {
     private var suspect = false
 
     def send(url: String, body: String, row: A): Unit = {
-      val u = URI.create(url)
-      val p = if (u.getPort >= 0) u.getPort else 80
-      val k = s"${u.getHost}:$p"
-      if (k != key) {
-        finish()
-        key = k; host = u.getHost; port = p
-        conn = pool.getOrElse(k, null)
-        suspect = conn != null
+      if (url != lastUrl) {
+        val u = URI.create(url)
+        val p = if (u.getPort >= 0) u.getPort else 80
+        val k = s"${u.getHost}:$p"
+        lastUrl = url; path = u.getRawPath
+        if (k != key) {
+          finish()
+          key = k; host = u.getHost; port = p
+          conn = pool.getOrElse(k, null)
+          suspect = conn != null
+        }
       }
-      val req = encode(u, k, body)
+      val req = encode(path, key, body)
       def full = !pending.isEmpty &&
         (pending.size >= MaxInFlight || pendingBytes + req.length > MaxInFlightBytes)
       if (full)
@@ -187,10 +193,10 @@ object FastHttp {
     }
   }
 
-  private def encode(u: URI, hostPort: String, body: String): Array[Byte] = {
+  private def encode(path: String, hostPort: String, body: String): Array[Byte] = {
     val payload = body.getBytes(StandardCharsets.UTF_8)
     val head =
-      (s"POST ${u.getRawPath} HTTP/1.1\r\n" +
+      (s"POST $path HTTP/1.1\r\n" +
         s"Host: $hostPort\r\n" +
         "Content-Type: application/json\r\n" +
         s"Content-Length: ${payload.length}\r\n" +

@@ -97,6 +97,27 @@ class LogSplitSpec extends SparkSuite {
     }
   }
 
+  test("a 2-segment batch plans one wave: as many pieces as cores, by largest remainder") {
+    // the catch-up spool's shape: segments of 1,048,809 and 329,080 bytes.
+    // One ceil per range gives 4 + 1 = 5 pieces on 4 cores, a second wave
+    // of one task; the shares 3.04 and 0.96 give 3 + 1.
+    val dir = Files.createTempDirectory("binlog_split_wave")
+    val txns = Iterator.from(0).map(txn)
+    def upTo(bytes: Long): Seq[Array[Byte]] = {
+      var size = (magic.length + fde.length).toLong
+      txns.takeWhile { t => size += t.length; size <= bytes }.toSeq
+    }
+    segment(dir, "mysql-bin.000001", upTo(1048809L): _*)
+    segment(dir, "mysql-bin.000002", upTo(329080L): _*)
+    assert(spark.sparkContext.defaultParallelism == 4)
+    val end = stream(dir).latestOffset().asInstanceOf[LogOffset]
+    val pieces = streamPieces(dir, LogOffset.Origin, end)
+    assert(pieces.size == 4)
+    assert(pieces.map(_.head._3) == Seq.fill(3)("mysql-bin.000001") :+ "mysql-bin.000002")
+    assert(pieces.flatten == unsplit(dir))
+    assertCutsAfterXid(pieces)
+  }
+
   test("a batch below the floor, and a range with no XID, are read by one partition") {
     val small = Files.createTempDirectory("binlog_split_small")
     segment(small, "mysql-bin.000001", (0 until 40).map(txn): _*)
